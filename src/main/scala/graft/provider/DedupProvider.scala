@@ -14,14 +14,17 @@ import graft.operators.RecordState
   *
   * Protocol per call:
   *  1. generate a fresh attempt UUID;
-  *  2. absorber gate: first in-process caller inserts SUCCESS, racers get
-  *     the winner's UUID and are declared DUPLICATE without a storage
+  *  2. absorber gate: first in-process caller takes its attempt time and
+  *     inserts SUCCESS (both under a JVM-wide lock striped by key), racers
+  *     get the winner's UUID and are declared DUPLICATE without a storage
   *     read (reference :44-65);
   *  3. read back all live SUCCESS attempts for the key;
-  *  4. >1 SUCCESS ⇒ conflict: the time-order winner demotes itself to
-  *     RETRY and throws RetryException (strategy re-runs with a fresh
-  *     UUID); losers demote to DUPLICATE and throw DuplicateException
-  *     (reference :67-95);
+  *  4. >1 SUCCESS ⇒ conflict: losers demote to DUPLICATE and throw
+  *     DuplicateException; the time-order winner re-reads with doubling
+  *     pauses, for at most the request timeout, until the later rows are
+  *     demoted — then it runs the block; if the conflict outlasts the
+  *     timeout it demotes itself to RETRY and throws RetryException
+  *     (strategy re-runs with a fresh UUID) (reference :67-95);
   *  5. exactly one SUCCESS (self) ⇒ run the block; a block failure marks
   *     the attempt FAILED and rethrows; if that update itself fails, the
   *     update error is thrown with the business error suppressed
@@ -46,8 +49,12 @@ class DedupProvider(
       var selfTimeMicros = 0L
 
       val absorbedUuid = absorber.absorb(cacheKey, () => {
-        selfTimeMicros = clockMicros()
-        insert(keyspace, table, key, selfTimeMicros, selfUuid, RecordState.Success, ttl)
+        // time and insert under the key's stripe: an in-process attempt
+        // timed later than ours then always reads our SUCCESS row
+        DedupProvider.stripe(cacheKey).synchronized {
+          selfTimeMicros = clockMicros()
+          insert(keyspace, table, key, selfTimeMicros, selfUuid, RecordState.Success, ttl)
+        }
         selfUuid
       })
 
@@ -57,9 +64,23 @@ class DedupProvider(
         throw new DuplicateException(key, table, keyspace)
       }
 
-      val now = clockMicros()
-      val successes = log.read(keyspace, table, key, now)
+      def readSuccesses() = log.read(keyspace, table, key, clockMicros())
         .filter(_.state == RecordState.Success)
+      var successes = readSuccesses()
+      def selfLeadsConflict = successes.size > 1 && successes.head.recordUuid == selfUuid
+      // The earliest attempt waits for the later ones to demote
+      // themselves before judging: retrying at once could let its fresh,
+      // later attempt lose to a racer's SUCCESS row whose DUPLICATE
+      // demotion has not landed yet, leaving the key with no winner.
+      // The wait is bounded by the request timeout (the reference's
+      // default backoff is 2× that timeout).
+      lazy val deadline = System.nanoTime() + DedupProviderBuilder.requestTimeoutMillis * 1000000L
+      var pauseMs = 1L
+      while (selfLeadsConflict && System.nanoTime() < deadline) {
+        Thread.sleep(math.max(1L, math.min(pauseMs, (deadline - System.nanoTime()) / 1000000L)))
+        pauseMs *= 2
+        successes = readSuccesses()
+      }
 
       if (successes.size > 1) {
         val winner = successes.head // read is (time, uuid)-ordered
@@ -116,6 +137,11 @@ class DedupProvider(
 
 object DedupProvider {
   private val lastMicros = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** JVM-wide lock stripes, picked by `keyspace:table:key`. */
+  private val stripes = Array.fill(256)(new Object)
+  private def stripe(cacheKey: String): Object =
+    stripes(Math.floorMod(cacheKey.hashCode, stripes.length))
 
   /** Strictly-increasing per-process microsecond clock — the analog of
     * the reference's TIMEUUID time component, which is monotonic within

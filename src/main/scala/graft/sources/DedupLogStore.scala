@@ -2,7 +2,9 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.operators.Dedup
 
 /** File-backed dedup log — the engine's analog of the reference's
@@ -24,11 +26,22 @@ import graft.operators.Dedup
   * aggregation shuffles on (already co-located) buckets.
   */
 class DedupLogStore(spark: SparkSession, root: String,
-                    format: String = "parquet", nBuckets: Int = 64) {
+                    val format: String = "parquet", nBuckets: Int = 64) {
 
   val schema: StructType = DedupLogStore.LogSchema
 
   private def path(keyspace: String, table: String) = s"$root/$keyspace/$table"
+
+  /** The `key_bucket` a key's rows live in: `pmod(hash(key), nBuckets)`,
+    * computed in the calling JVM with the same Murmur3 (seed 42) that Spark's
+    * `hash` runs, so per-row writers land where [[append]] puts a key.
+    */
+  def bucketOf(key: String): Int = Math.floorMod(
+    Murmur3HashFunction.hash(UTF8String.fromString(key), StringType, 42L).toInt, nBuckets)
+
+  /** The directory holding every row of `key` (one `key_bucket=<b>`). */
+  def bucketDir(keyspace: String, table: String, key: String): String =
+    s"${path(keyspace, table)}/key_bucket=${bucketOf(key)}"
 
   /** O1: append attempt rows. Creates the table path on first write. */
   def append(keyspace: String, table: String, attempts: DataFrame): Unit =
@@ -40,46 +53,6 @@ class DedupLogStore(spark: SparkSession, root: String,
       .partitionBy("key_bucket")
       .format(format).save(path(keyspace, table))
 
-  /** Concurrency-safe append for the per-call protocol: [[append]]'s
-    * committer stages every concurrent job in the SAME `_temporary/0`
-    * under the destination, so two in-flight appends are mutually
-    * destructive — the first commit sweeps `_temporary` and kills the
-    * other's task files (caught by DedupLogContractSpec's concurrent-
-    * appends invariant). This path stages each batch in its own hidden
-    * `.stage_<uuid>` dir, then MOVES the finished part files into their
-    * bucket directories under fresh unique names — one rename per file,
-    * atomic on posix/HDFS, safe across threads AND processes (the
-    * cross-JVM race CrossJvmDedupSpec drives). Object stores without
-    * atomic rename need a real concurrent committer instead.
-    */
-  def appendAtomic(keyspace: String, table: String, attempts: DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dest = path(keyspace, table)
-    val stage = s"$dest/.stage_${java.util.UUID.randomUUID()}"
-    attempts
-      .select(col("key"), col("event_time"), col("record_uuid"),
-        col("state").cast("smallint"), col("expires_at"))
-      .withColumn("key_bucket", pmod(hash(col("key")), lit(nBuckets)))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("key_bucket")
-      .format(format).save(stage)
-    val fs = new Path(stage).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      fs.listStatus(new Path(stage)).filter(_.isDirectory).foreach { b =>
-        val bucketDir = new Path(dest, b.getPath.getName)
-        fs.mkdirs(bucketDir) // idempotent; concurrent creators both succeed
-        fs.listStatus(b.getPath)
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
-          .foreach { f =>
-            val tgt = new Path(bucketDir,
-              s"${java.util.UUID.randomUUID()}-${f.getPath.getName}")
-            if (!fs.rename(f.getPath, tgt))
-              throw new java.io.IOException(s"append rename failed: ${f.getPath} -> $tgt")
-          }
-      }
-    } finally fs.delete(new Path(stage), true)
-  }
-
   /** O2+O10: all live attempts, optionally for one key (key lookups prune
     * to one bucket directory before touching data).
     */
@@ -90,8 +63,7 @@ class DedupLogStore(spark: SparkSession, root: String,
       .load(path(keyspace, table))
     val keyed = key match {
       case Some(k) =>
-        base.filter(col("key_bucket") === pmod(hash(lit(k)), lit(nBuckets)) &&
-                    col("key") === k)
+        base.filter(col("key_bucket") === bucketOf(k) && col("key") === k)
       case None => base
     }
     keyed.filter(col("expires_at").isNull || col("expires_at") > lit(now))
@@ -136,25 +108,6 @@ object DedupLogStore {
     StructField("record_uuid", StringType, nullable = false),
     StructField("state", ShortType, nullable = false),
     StructField("expires_at", TimestampType, nullable = true)))
-
-  /** End-to-end log round trip under the correctness gate: derive
-    * attempt rows from `events` (deterministically — recorded state =
-    * protocol rank per key, every 5th event_id pre-expired), APPEND them
-    * through the store (O1 insert + O17 auto-create), COMPACT with a
-    * pinned `now` (O10 TTL reclaim), READ the compacted log back (O2),
-    * and emit per-state row/key counts. The write→compact→read plumbing
-    * collapses in the oracle to the same derivation + TTL filter in pure
-    * SQL — a hash-matched row attests the store preserved exactly the
-    * live rows, byte-for-byte through the parquet round trip.
-    *
-    * The pinned now (2030-01-01) is far beyond every event ts, so the
-    * pre-expired rows (ts + 1 day) are reclaimed and NULL-expiry rows
-    * are immortal — the reference's `USING TTL 0` contract.
-    */
-  def compactionRoundTrip(spark: SparkSession, dir: String,
-                          format: String = "parquet"): DataFrame =
-    statsOf(spark, buildCompactedLog(spark, dir, format,
-      Scratch.tempDir("graft_dedup_log_")), format)
 
   /** One compacted log per (JVM, corpus dir, format) — the ingest seam
     * of the registry row, so the bench can time the append+compact

@@ -110,6 +110,44 @@ class DedupProviderSpec extends AnyFunSuite {
     } finally pool.shutdown()
   }
 
+  // The zero-run race: when the earliest attempt retried at once, its
+  // fresh attempt could read the later racer's SUCCESS row before that
+  // racer's DUPLICATE demotion landed, lose to it, and leave the key with
+  // no winner. Slow demotions widen that window on every try.
+  test("two racing first calls with slow demotions: the block runs exactly once") {
+    val log = new InMemoryDedupLog {
+      override def updateState(ks: String, t: String, key: String,
+          timeMicros: Long, uuid: String, state: Short): Unit = {
+        if (state == RecordState.Duplicate) Thread.sleep(30)
+        super.updateState(ks, t, key, timeMicros, uuid, state)
+      }
+    }
+    val providers = Seq.fill(2)(
+      new DedupProvider(log, new FixedDelayRetryStrategy(5, 1L), new NoDuplicateBurstAbsorber))
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val runs = (1 to 50).map { i =>
+        val blocks = new AtomicInteger
+        val start = new CountDownLatch(1)
+        val futures = providers.map { p =>
+          pool.submit(new java.util.concurrent.Callable[Unit] {
+            override def call(): Unit = {
+              start.await(5, TimeUnit.SECONDS)
+              try p.process(s"race-$i", "t", "ks", Duration.Zero,
+                () => blocks.incrementAndGet())
+              catch { case _: DuplicateException => () }
+            }
+          })
+        }
+        start.countDown()
+        futures.foreach(_.get(30, TimeUnit.SECONDS))
+        blocks.get
+      }
+      val bad = runs.zipWithIndex.filter(_._1 != 1)
+      assert(bad.isEmpty, s"${bad.size} of 50 tries ran the block other than once: $bad")
+    } finally pool.shutdown()
+  }
+
   // outcome 4: block error → FAILED row, business error rethrown (ref :212-241)
   test("block failure: FAILED row, original exception rethrown") {
     val log = new InMemoryDedupLog
