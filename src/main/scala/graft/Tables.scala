@@ -71,7 +71,6 @@ object Tables {
     */
   private[graft] def widened(spark: SparkSession, df: DataFrame,
                              path: String): DataFrame = {
-    if (spark.conf.get("spark.graft.scan.widen", "true") == "false") return df
     val (nFiles, bytes) = fileStats(spark, path)
     val par = spark.sparkContext.defaultParallelism
     val maxPart = spark.sessionState.conf.filesMaxPartitionBytes

@@ -1,8 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.lanes result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/check_oracle.py). */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query names (fast local
@@ -48,16 +48,16 @@ object Verify {
     // chain self-sufficient regardless of driver state
     var nOk = 0
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .foreach { case (name, fn) =>
+    SparkEntry.lanes
+      .filter(lane => only.isEmpty || only.contains(lane.name))
+      .foreach { lane =>
         try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
+          lane.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/${lane.name}")
           nOk += 1
         } catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          failed += name
+          System.err.println(s"[verify] ${lane.name} failed: ${e.getMessage}")
+          failed += lane.name
         }
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -75,9 +75,13 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // rows-only lanes have no oracle row; the record names them so a
+    // reader can tell them from lanes that lost their SQL
+    val rowsOnly = SparkEntry.lanes.collect { case Lane(k, _, Lane.RowsOnly(_), _) => q(k) }
     Files.writeString(Paths.get(s"$outDir/summary.json"),
       s"""{"n_ok": $nOk, "n_failed": ${failed.size}, """ +
-        s""""failed": [${failed.map(q).mkString(",")}]}""")
+        s""""failed": [${failed.map(q).mkString(",")}], """ +
+        s""""rows_only": [${rowsOnly.mkString(",")}]}""")
     if (failed.nonEmpty)
       System.err.println(s"[verify] ${failed.size} quer${
         if (failed.size == 1) "y" else "ies"} FAILED: ${failed.mkString(", ")}")

@@ -108,16 +108,6 @@ object Compaction {
     maybeCompactBucketed(spark, table, policy)
   }
 
-  /** Tombstone `ids` in the bucketed store then collapse the log if a
-    * policy bound tripped. Returns whether compaction fired.
-    */
-  def removeFromBucketedStoreAuto(spark: SparkSession, table: String,
-                                  ids: DataFrame,
-                                  policy: Policy = Policy()): Boolean = {
-    Hnsw.removeFromBucketedStore(spark, table, ids)
-    maybeCompactBucketed(spark, table, policy)
-  }
-
   def maybeCompactBucketed(spark: SparkSession, table: String,
                            policy: Policy = Policy()): Boolean = {
     val stats = spark.table(table).agg(

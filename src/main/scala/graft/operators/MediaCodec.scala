@@ -220,9 +220,6 @@ object MediaCodec {
 
   // ── raw gray8 frame container ("GRV0") ─────────────────────────────
 
-  def rawVideoSize(width: Int, height: Int, nFrames: Int): Int =
-    16 + width * height * nFrames
-
   def encodeRawVideo(width: Int, height: Int, nFrames: Int,
                      pix: Int => Byte): Array[Byte] = {
     val dataLen = width * height * nFrames

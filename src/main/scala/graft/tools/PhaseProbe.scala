@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import graft.{DeployProfile, SparkEntry}
+import graft.{DeployProfile, Lane, SparkEntry}
 
 /** Dev tool (guide §1): split a lane's wall time into DataFrame
   * construction, analysis+optimization+physical planning, and execution
@@ -16,8 +16,8 @@ object PhaseProbe {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val repeats = args.lift(1).map(_.toInt).getOrElse(3)
     val lanes = args.lift(2) match {
-      case Some("ALL") | None => SparkEntry.queries.keys.toSeq.sorted
-      case Some(s) => s.split(',').toSeq
+      case Some("ALL") | None => SparkEntry.lanes.sortBy(_.name)
+      case Some(s) => SparkEntry.lanesNamed(s.split(',').toSeq)
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = DeployProfile.configure(
@@ -44,10 +44,9 @@ object PhaseProbe {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    lanes.foreach { lane =>
-      val fn = SparkEntry.queries(lane)
+    lanes.foreach { case Lane(lane, fn, _, build) =>
       // stage builders run first, untimed — same contract as Bench
-      SparkEntry.stageBuilders.get(lane).foreach { b =>
+      build.foreach { b =>
         try b(spark, dir)
         catch { case e: Throwable =>
           System.err.println(s"[phase] $lane builder failed: ${e.getMessage}") }

@@ -10,10 +10,10 @@ package graft
 class PlanDisciplineSpec extends SparkSpec {
 
   test("no registered query plans a CartesianProduct") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
+    SparkEntry.lanes.foreach { lane =>
+      val plan = lane.run(spark, sfDir).queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"),
-        s"query '$name' plans a CartesianProduct")
+        s"query '${lane.name}' plans a CartesianProduct")
     }
   }
 }
