@@ -13,12 +13,12 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = DeployProfile.localCpus
     // session config comes from the DeployProfile so the committed
     // protocol records stay reproducible from one source of truth
     val spark = DeployProfile.configure(
         SparkSession.builder().appName("graft-bench"),
-        DeployProfile.local(cpus.toInt))
+        DeployProfile.local(cpus))
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -41,7 +41,7 @@ object Bench {
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty)
     val selected = SparkEntry.lanes.filter(l => only.isEmpty || only(l.name))
-    val (lines, failed) = run(spark, sfDir, selected, repeats, cpus.toInt, loadStart)
+    val (lines, failed) = run(spark, sfDir, selected, repeats, cpus, loadStart)
     lines.foreach(println)
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)

@@ -33,6 +33,12 @@ import org.apache.spark.sql.SparkSession
   */
 object DeployProfile {
 
+  /** Local core count: the `SPARK_GRAFT_CPUS` deployment setting when
+    * set, else every core the JVM sees.
+    */
+  def localCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
   /** The committed local/single-JVM config — what every protocol
     * bench record and oracle-gate run in BASELINE.md was measured
     * under. Shuffle partitions = core count: on one box the core

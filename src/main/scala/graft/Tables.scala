@@ -25,11 +25,14 @@ object Tables {
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+  /** Table `name` of `sfDir`; `wide` applies [[widened]]. */
+  def load(spark: SparkSession, sfDir: String, name: String,
+           wide: Boolean = false): DataFrame = {
     val path = s"$sfDir/$name.parquet"
     val schema = schemaCache.computeIfAbsent(path,
       p => spark.read.parquet(p).schema)
-    spark.read.schema(schema).parquet(path)
+    val df = spark.read.schema(schema).parquet(path)
+    if (wide) widened(spark, df, path) else df
   }
 
   /** File stats (count, total bytes) per table path — metadata, cached
@@ -68,6 +71,30 @@ object Tables {
     * is the identity — and the size guard keeps it off for any table
     * big enough that the exchange would cost more than a scan pass
     * (> one maxPartitionBytes split per core).
+    *
+    * Which tables widen, measured per consumer:
+    *   - documents, opt-in (`wide = true`) for the per-row text kernels
+    *     (quality/repetition regex ladders, trigram/PII scans,
+    *     shinglers, chunkers, BPE training): 0.3-0.9 s/lane faster with
+    *     scan parallelism. Light consumers (sampling filters, count
+    *     rollups, doc_id/source projections) stay narrow: for them the
+    *     extra exchange is pure cost (+0.1-0.4 s/lane).
+    *   - events, opt-in for expensive per-row work (JSON props parsing)
+    *     straight off the scan. Most events consumers shuffle by
+    *     user/key immediately — the window's own exchange already
+    *     provides the parallelism and widening is pure cost
+    *     (+0.2 s/lane).
+    *   - orders, opt-in for the one consumer (column profiling) whose
+    *     multi-distinct Expand multiplies every scanned row 10× inside
+    *     the scan stage; everywhere else orders broadcasts or joins
+    *     keyed.
+    *   - lineitem, always: the fact table's dims all broadcast at bench
+    *     scale, so join + partial-agg chains execute INSIDE the scan
+    *     stage; with a single-row-group file that is one task doing the
+    *     whole join (a 0.98 s single-task stage in q_region_revenue).
+    *   - embeddings, never: the ANN probes broadcast the query side and
+    *     the store scans feed straight into k-heap partial aggregates;
+    *     widening measured as a uniform +0.2 s/lane loss there.
     */
   private[graft] def widened(spark: SparkSession, df: DataFrame,
                              path: String): DataFrame = {
@@ -77,31 +104,14 @@ object Tables {
     if (nFiles < par && bytes <= maxPart * par) df.repartition(par) else df
   }
 
-  /** [[load]] + [[widened]] — for the tables whose consumers run
-    * expensive per-row kernels straight off the scan.
-    */
-  def loadWide(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    widened(spark, load(spark, sfDir, name), s"$sfDir/$name.parquet")
-
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame   = load(s, d, "customer")
   def supplier(s: SparkSession, d: String): DataFrame   = load(s, d, "supplier")
   def part(s: SparkSession, d: String): DataFrame       = load(s, d, "part")
-  def orders(s: SparkSession, d: String): DataFrame     = load(s, d, "orders")
-  /** [[orders]] + [[widened]] — for the one consumer (column profiling)
-    * whose multi-distinct Expand multiplies every scanned row 10× inside
-    * the scan stage; everywhere else orders broadcasts or joins keyed.
-    */
-  def ordersWide(s: SparkSession, d: String): DataFrame = loadWide(s, d, "orders")
-  /** lineitem: widened (see [[documentsWide]]) — the fact table's dims
-    * all broadcast at bench scale, so join + partial-agg chains execute
-    * INSIDE the scan stage; with a single-row-group file that is one
-    * task doing the whole join (measured: a 0.98 s single-task stage in
-    * q_region_revenue). At production file counts the widen is the
-    * identity.
-    */
-  def lineitem(s: SparkSession, d: String): DataFrame   = loadWide(s, d, "lineitem")
+  def orders(s: SparkSession, d: String, wide: Boolean = false): DataFrame =
+    load(s, d, "orders", wide)
+  def lineitem(s: SparkSession, d: String): DataFrame   = load(s, d, "lineitem", wide = true)
   /** Driver-written events.parquet stores `ts` as parquet
     * TIMESTAMP(NANOS), which Spark rejects by default
     * (PARQUET_TYPE_ILLEGAL). Read nanos as long and truncate to
@@ -110,7 +120,7 @@ object Tables {
     * (e.g. the GenData scale corpus) store micros and arrive as a
     * TimestampType column already — pass those through unchanged.
     */
-  def events(s: SparkSession, d: String): DataFrame = {
+  def events(s: SparkSession, d: String, wide: Boolean = false): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(s, d, "events")
     val ts = raw.schema("ts").dataType match {
@@ -118,32 +128,12 @@ object Tables {
         org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)")
       case _ => org.apache.spark.sql.functions.col("ts")
     }
-    raw.withColumn("ts", ts)
+    val df = raw.withColumn("ts", ts)
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
+    if (wide) widened(s, df, s"$d/events.parquet") else df
   }
 
-  /** [[events]] + [[widened]], for consumers that run expensive per-row
-    * work (JSON props parsing) straight off the scan. Most events
-    * consumers shuffle by user/key immediately — for those the window's
-    * own exchange already provides the parallelism and widening is pure
-    * cost (measured +0.2 s/lane), so it stays opt-in per call site.
-    */
-  def eventsWide(s: SparkSession, d: String): DataFrame =
-    widened(s, events(s, d), s"$d/events.parquet")
-
-  /** [[documents]] + [[widened]], for the per-row text kernels
-    * (quality/repetition regex ladders, trigram/PII scans, shinglers,
-    * chunkers, BPE training) — measured 0.3-0.9 s/lane faster with scan
-    * parallelism. Light consumers (sampling filters, count rollups,
-    * doc_id/source projections) stay on [[documents]]: for them the
-    * extra exchange is pure cost (measured +0.1-0.4 s/lane). embeddings
-    * is never widened — the ANN probes broadcast the query side and the
-    * store scans feed straight into k-heap partial aggregates; widening
-    * measured as a uniform +0.2 s/lane loss there.
-    */
-  def documentsWide(s: SparkSession, d: String): DataFrame =
-    loadWide(s, d, "documents")
-
-  def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
+  def documents(s: SparkSession, d: String, wide: Boolean = false): DataFrame =
+    load(s, d, "documents", wide)
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 }

@@ -10,7 +10,6 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Set[String] =
       if (args.length > 2) args(2).split(',').map(_.trim).toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // same DeployProfile.local map as the bench: the correctness gate
     // verifies under the exact config the timings were recorded under.
     // SPARK_GRAFT_MASTER overrides the master for the multi-JVM
@@ -37,7 +36,7 @@ object Verify {
           sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_OPTS", ""))
     }.getOrElse(Map.empty[String, String])
     val spark = DeployProfile.configure(
-        SparkSession.builder(), DeployProfile.local(cpus.toInt) ++ masterOverride)
+        SparkSession.builder(), DeployProfile.local(DeployProfile.localCpus) ++ masterOverride)
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

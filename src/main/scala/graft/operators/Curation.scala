@@ -208,7 +208,7 @@ object Curation {
     * |sources| rows per split, however large the corpus.
     */
   def ruleMatrix(spark: SparkSession, dir: String): DataFrame =
-    ruleMatrixAggOf(ruleBitsOf(TextOps.piiSeeded(Tables.documentsWide(spark, dir)
+    ruleMatrixAggOf(ruleBitsOf(TextOps.piiSeeded(Tables.documents(spark, dir, wide = true)
       .select(col("doc_id"), col("source"), col("text")))))
       .orderBy(col("source"))
 

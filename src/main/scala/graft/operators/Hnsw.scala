@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Artifacts
 
 /** HNSW (Malkov & Yashunin 2016, arXiv:1603.09320) as a SHARDED Spark
   * index — the graph-based ANN family beside the LSH / IVF / PQ lanes,
@@ -730,7 +731,7 @@ object Hnsw {
         typedLit(Seq.empty[Float]).as("embedding"),
         lit(nextVer).as("ver"))
     graft.sources.BucketedTables.appendBucketed(tombs, table, "shard")
-    graft.sources.FsPaths.touch(spark, storeMarker(spark, table))
+    graft.sources.FsPaths.touch(spark, Artifacts.tableMarker(spark, table))
   }
 
   // ── Executor-resident graph cache: [[probeBucketedStore]] is the
@@ -778,48 +779,28 @@ object Hnsw {
     * probe still caches consistently within that store state).
     */
   private def storeMarkerMtime(spark: SparkSession, table: String): Long = {
-    val p = storeMarker(spark, table)
+    val p = Artifacts.tableMarker(spark, table)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.getFileStatus(p).getModificationTime else 0L
   }
 
-  private val graphStoreNames =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int, Int), String]()
-
-  /** One bucketed store per (dir, operating point): built from the
-    * session-staged graph, completion-marker-gated so a half-written
-    * store from a failed run rebuilds (the ensureGrownSearchIndex
-    * discipline); the name carries [[Search.dirHash]] so distinct dirs
-    * can never collide onto one table.
+  /** One bucketed store per (dir, operating point), built from the
+    * session-staged graph as an [[Artifacts.table]]; the name carries
+    * [[Search.dirHash]] so distinct dirs can never collide onto one
+    * table.
     */
   def ensureBucketedGraphStore(spark: SparkSession, dir: String,
                                params: Params = Params(),
                                targetShardRows: Int = 4096): String = {
-    import graft.sources.FsPaths
     // _v2: the log-structured schema (ver column) — a fresh slug, so a
     // warehouse carrying the pre-ver layout rebuilds instead of failing
     // the probe's ver select
-    val name = graphStoreNames.computeIfAbsent(
-      (dir, params.m, params.efConstruction, targetShardRows),
-      _ => s"graft_hnsw_store_v2_${params.m}_${params.efConstruction}_" +
-        s"${targetShardRows}_" + Search.dirHash(dir))
-    graphStoreNames.synchronized {
-      // cross-JVM file lock beside the table dir: two processes
-      // sharing the warehouse serialize the (re)build; the marker
-      // re-check inside makes the loser a no-op
-      val tp = FsPaths.warehouseTablePath(spark, name)
-      FsPaths.withFileLock(spark,
-        new org.apache.hadoop.fs.Path(tp.getParent, tp.getName + ".lock")) {
-      if (!spark.catalog.tableExists(name) ||
-          !FsPaths.exists(spark, storeMarker(spark, name))) {
-        if (spark.catalog.tableExists(name)) spark.sql(s"DROP TABLE $name")
-        FsPaths.deleteRecursively(spark, FsPaths.warehouseTablePath(spark, name))
-        graft.sources.BucketedTables.writeBucketed(
-          ensureGraph(spark, dir, params, targetShardRows)
-            .withColumn("ver", lit(0L)), name, "shard")
-        FsPaths.touch(spark, storeMarker(spark, name))
-      }
-      }
+    val name = s"graft_hnsw_store_v2_${params.m}_${params.efConstruction}_" +
+      s"${targetShardRows}_" + Search.dirHash(dir)
+    Artifacts.table(spark, name) {
+      graft.sources.BucketedTables.writeBucketed(
+        ensureGraph(spark, dir, params, targetShardRows)
+          .withColumn("ver", lit(0L)), name, "shard")
     }
     name
   }
@@ -880,7 +861,7 @@ object Hnsw {
     graft.sources.BucketedTables.appendBucketed(
       delta.toDF().withColumn("ver", lit(nextVer)), table, "shard")
     // bump the executor graph cache's version stamp
-    graft.sources.FsPaths.touch(spark, storeMarker(spark, table))
+    graft.sources.FsPaths.touch(spark, Artifacts.tableMarker(spark, table))
   }
 
   /** Build a bucketed serving store from an arbitrary base vector set —
@@ -899,7 +880,7 @@ object Hnsw {
           .withColumn("shard", (col("vec_id") % shards).cast("int"))
           .as[(Long, Seq[Float], Int)], shards, params)
         .toDF().withColumn("ver", lit(0L)), table, "shard")
-    graft.sources.FsPaths.touch(spark, storeMarker(spark, table))
+    graft.sources.FsPaths.touch(spark, Artifacts.tableMarker(spark, table))
   }
 
   /** Exact top-k probe of an arbitrary bucketed store table — the
@@ -940,12 +921,8 @@ object Hnsw {
     // the rewrite replaced every file — drop any cached listing before
     // a standing reader's next probe plans against vanished parts
     spark.catalog.refreshTable(table)
-    graft.sources.FsPaths.touch(spark, storeMarker(spark, table))
+    graft.sources.FsPaths.touch(spark, Artifacts.tableMarker(spark, table))
   }
-
-  private def storeMarker(spark: SparkSession, name: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      graft.sources.FsPaths.warehouseTablePath(spark, name), "_GRAFT_GROWN")
 
   /** The registered `ann_hnsw_served` lane: exact top-k probe of the
     * bucketed store — same oracle SQL as the gate lane (the layout
@@ -1104,41 +1081,25 @@ object Hnsw {
   final case class SqShardProbe(shard: Int, nodes: Seq[SqStoredNode],
                                 qs: Seq[QVec])
 
-  private val sq8StoreNames =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int, Int), String]()
-
   /** One SQ8 bucketed store per (dir, operating point): the staged
     * full-precision graph's topology joined to the SQ8 code table,
-    * embedding column replaced by the codes — completion-marker-gated
-    * like [[ensureBucketedGraphStore]] (whose float rows this store
-    * undercuts ~4×; HnswSq8Spec pins the byte ratio).
+    * embedding column replaced by the codes (an [[Artifacts.table]]
+    * whose rows undercut [[ensureBucketedGraphStore]]'s float rows ~4×;
+    * HnswSq8Spec pins the byte ratio).
     */
   def ensureSq8GraphStore(spark: SparkSession, dir: String,
                           params: Params = Params(),
                           targetShardRows: Int = 4096): String = {
-    import graft.sources.FsPaths
-    val name = sq8StoreNames.computeIfAbsent(
-      (dir, params.m, params.efConstruction, targetShardRows),
-      _ => s"graft_hnsw_sq8_${params.m}_${params.efConstruction}_" +
-        s"${targetShardRows}_" + Search.dirHash(dir))
-    sq8StoreNames.synchronized {
-      val tp = FsPaths.warehouseTablePath(spark, name)
-      FsPaths.withFileLock(spark,
-        new org.apache.hadoop.fs.Path(tp.getParent, tp.getName + ".lock")) {
-      if (!spark.catalog.tableExists(name) ||
-          !FsPaths.exists(spark, storeMarker(spark, name))) {
-        if (spark.catalog.tableExists(name)) spark.sql(s"DROP TABLE $name")
-        FsPaths.deleteRecursively(spark, FsPaths.warehouseTablePath(spark, name))
-        val rows = ensureGraph(spark, dir, params, targetShardRows)
-          .drop("embedding")
-          .join(Similarity.sqCodes(spark, dir), Seq("vec_id"))
-          .select(col("shard"), col("vec_id"), col("level"), col("nbrs"),
-            transform(col("codes"), c => c.cast("int")).as("code"),
-            lit(0L).as("ver"))
-        graft.sources.BucketedTables.writeBucketed(rows, name, "shard")
-        FsPaths.touch(spark, storeMarker(spark, name))
-      }
-      }
+    val name = s"graft_hnsw_sq8_${params.m}_${params.efConstruction}_" +
+      s"${targetShardRows}_" + Search.dirHash(dir)
+    Artifacts.table(spark, name) {
+      val rows = ensureGraph(spark, dir, params, targetShardRows)
+        .drop("embedding")
+        .join(Similarity.sqCodes(spark, dir), Seq("vec_id"))
+        .select(col("shard"), col("vec_id"), col("level"), col("nbrs"),
+          transform(col("codes"), c => c.cast("int")).as("code"),
+          lit(0L).as("ver"))
+      graft.sources.BucketedTables.writeBucketed(rows, name, "shard")
     }
     name
   }
@@ -1320,7 +1281,7 @@ object Hnsw {
       }
     graft.sources.BucketedTables.writeBucketed(
       nodes.toDF().withColumn("ver", lit(0L)), table, "shard")
-    graft.sources.FsPaths.touch(spark, storeMarker(spark, table))
+    graft.sources.FsPaths.touch(spark, Artifacts.tableMarker(spark, table))
   }
 
   /** Insert a vector batch into an SQ8 serving store —
@@ -1379,7 +1340,7 @@ object Hnsw {
       }
     graft.sources.BucketedTables.appendBucketed(
       delta.toDF().withColumn("ver", lit(nextVer)), table, "shard")
-    graft.sources.FsPaths.touch(spark, storeMarker(spark, table))
+    graft.sources.FsPaths.touch(spark, Artifacts.tableMarker(spark, table))
   }
 
   /** Tombstoned DELETE on an SQ8 store — [[removeFromBucketedStore]]'s
@@ -1405,7 +1366,7 @@ object Hnsw {
         typedLit(Seq.empty[Int]).as("code"),
         lit(nextVer).as("ver"))
     graft.sources.BucketedTables.appendBucketed(tombs, table, "shard")
-    graft.sources.FsPaths.touch(spark, storeMarker(spark, table))
+    graft.sources.FsPaths.touch(spark, Artifacts.tableMarker(spark, table))
   }
 
   /** Exact top-k probe of an arbitrary SQ8 store table — the

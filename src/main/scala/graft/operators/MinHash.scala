@@ -300,7 +300,7 @@ object MinHash {
     */
   private[operators] def cachedShingleArray(spark: SparkSession, dir: String): DataFrame =
     memoized(spark, "shingle_array", dir)(
-      shingleArray(Tables.documentsWide(spark, dir)))
+      shingleArray(Tables.documents(spark, dir, wide = true)))
 
   /** Exact-dup classes over the corpus, memoized alongside the shingle
     * index they derive from — every collapsed lane (pairs, incremental,
@@ -345,7 +345,7 @@ object MinHash {
   def materializeShingleIndex(spark: SparkSession, dir: String,
                               table: String, nBuckets: Int = 32): Unit =
     graft.sources.BucketedTables.writeBucketed(
-      shingleIndexRows(Tables.documentsWide(spark, dir)), table, "doc_id", nBuckets)
+      shingleIndexRows(Tables.documents(spark, dir, wide = true)), table, "doc_id", nBuckets)
 
   /** The store row shape: (doc_id, shingles, rep, sig) — the exact-dup
     * class rep AND the minhash signature ride along (computed once at
@@ -396,40 +396,18 @@ object MinHash {
     * probing it must produce the same verified pairs as the in-memory
     * full pipeline (the dedup_lsh_grown oracle row's gate).
     */
-  private val grownTables =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
-
   private[graft] def ensureGrownShingleIndex(spark: SparkSession, dir: String,
                                              batchMod: Int = 5): String = {
-    val name = grownTables.computeIfAbsent((dir, batchMod),
-      _ => s"graft_shingle_grown_${batchMod}_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-    grownTables.synchronized {
-      // tableExists is true as soon as the BASE writeBucketed lands, so
-      // it cannot distinguish a half-grown store whose append failed —
-      // an explicit marker written AFTER the append is the completion
-      // check (mirrors ensureGrownIvfIndex's _GRAFT_GROWN).
-      if (!spark.catalog.tableExists(name) ||
-          !graft.sources.FsPaths.exists(spark, grownMarker(spark, name))) {
-        if (spark.catalog.tableExists(name)) spark.sql(s"DROP TABLE $name")
-        dropStaleLocation(spark, name)
-        val docs = Tables.documentsWide(spark, dir)
-        graft.sources.BucketedTables.writeBucketed(
-          shingleIndexRows(docs.filter(col("doc_id") % batchMod =!= 0)),
-          name, "doc_id", 32)
-        appendShingleIndex(name, docs.filter(col("doc_id") % batchMod === 0))
-        graft.sources.FsPaths.touch(spark, grownMarker(spark, name))
-      }
+    val name = s"graft_shingle_grown_${batchMod}_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+    graft.sources.Artifacts.table(spark, name) {
+      val docs = Tables.documents(spark, dir, wide = true)
+      graft.sources.BucketedTables.writeBucketed(
+        shingleIndexRows(docs.filter(col("doc_id") % batchMod =!= 0)),
+        name, "doc_id", 32)
+      appendShingleIndex(name, docs.filter(col("doc_id") % batchMod === 0))
     }
     name
   }
-
-  /** Completion-marker path inside the grown table's managed location —
-    * resolved via the warehouse's own FileSystem (hdfs/s3a-safe), not
-    * java.nio (see [[graft.sources.FsPaths]]).
-    */
-  private def grownMarker(spark: SparkSession, table: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      graft.sources.FsPaths.warehouseTablePath(spark, table), "_GRAFT_GROWN")
 
   /** [[minhashDedupBucketed]] against the grown (base + appended batch)
     * store — same pairs as the one-shot pipeline by construction.
@@ -582,36 +560,12 @@ object MinHash {
   /** One bucketed shingle-index materialization per (JVM, dir) — the
     * registry's incremental row probes a PERSISTED store, and writing it
     * is an ingest-time job that must not repeat per enumeration.
-    *
-    * The table lives in a SESSION's in-memory catalog while the memo is
-    * JVM-wide, so every hit re-checks `tableExists` against the caller's
-    * session and rebuilds if this session never registered it (a second
-    * SparkSession in the same JVM would otherwise get a dangling name).
     */
-  private val indexTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def ensureShingleIndex(spark: SparkSession, dir: String): String = {
-    val name = indexTables.computeIfAbsent(dir,
-      _ => "graft_shingle_idx_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-    indexTables.synchronized {
-      if (!spark.catalog.tableExists(name)) buildShingleIndex(spark, dir, name)
-    }
+    val name = "graft_shingle_idx_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+    graft.sources.Artifacts.table(spark, name)(materializeShingleIndex(spark, dir, name))
     name
   }
-
-  private def buildShingleIndex(spark: SparkSession, dir: String, table: String): Unit = {
-    dropStaleLocation(spark, table)
-    materializeShingleIndex(spark, dir, table)
-  }
-
-  /** The default in-memory catalog forgets tables across JVMs but their
-    * managed LOCATION under spark-warehouse survives — remove a stale
-    * one or saveAsTable refuses the name.
-    */
-  private def dropStaleLocation(spark: SparkSession, table: String): Unit =
-    graft.sources.FsPaths.deleteRecursively(
-      spark, graft.sources.FsPaths.warehouseTablePath(spark, table))
 
   /** [[incrementalDedup]] probing the PERSISTED bucketed shingle index
     * instead of recomputing corpus signatures per run — the true
@@ -631,7 +585,7 @@ object MinHash {
     val isBatch = col("doc_id") % batchMod === 0
     val store = withRep(spark.table(table))
     // the incoming batch: shingled + signed fresh from the source table
-    val batchSh = shingleArray(Tables.documentsWide(spark, dir).filter(isBatch))
+    val batchSh = shingleArray(Tables.documents(spark, dir, wide = true).filter(isBatch))
     val batchBands = bands(batchSh.filter(size(col("shingles")) > 0)
       .select(col("doc_id"),
         graft.functions.functions.minhash_sig(col("shingles"), NumHashes).as("sig")))

@@ -36,7 +36,7 @@ object Profile {
   }
 
   def profileOrders(spark: SparkSession, dir: String): DataFrame =
-    columnProfile(Tables.ordersWide(spark, dir))
+    columnProfile(Tables.orders(spark, dir, wide = true))
 
   /** Declarative data-quality EXPECTATIONS (the Deequ/Great-Expectations
     * shape): a rule set validated in bulk, one row per rule with exact

@@ -909,7 +909,7 @@ object Relational {
 
   /** Semi-structured: parse the JSON `props` column and aggregate. */
   def qEventsProps(spark: SparkSession, dir: String): DataFrame =
-    Tables.eventsWide(spark, dir)
+    Tables.events(spark, dir, wide = true)
       .withColumn("k", get_json_object(col("props"), "$.k").cast("bigint"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -947,7 +947,7 @@ object Relational {
     * discovers the key universe).
     */
   def qEventsPropsKeys(spark: SparkSession, dir: String): DataFrame =
-    Tables.eventsWide(spark, dir)
+    Tables.events(spark, dir, wide = true)
       .select(col("event_type"),
         explode(map_keys(from_json(col("props"),
           org.apache.spark.sql.types.MapType(

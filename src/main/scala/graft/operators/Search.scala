@@ -643,13 +643,8 @@ object Search {
     * doc_id % batchMod != 0, then [[appendSearchIndex]] of the rest —
     * probing it must produce the same ranking as the session-staged
     * full pipeline (the search_grown oracle row's gate, same SQL as
-    * search_bm25_topk). Completion marker after the append, so a
-    * half-grown store from a failed run rebuilds (the
-    * ensureGrownShingleIndex discipline).
+    * search_bm25_topk).
     */
-  private val grownIndexes =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
-
   private[graft] def ensureGrownSearchIndex(spark: SparkSession, dir: String,
                                             batchMod: Int = 5): String = {
     // dir → table name must be INJECTIVE: sanitation alone collides
@@ -657,22 +652,13 @@ object Search {
     // the first's tables + marker and silently probe the wrong
     // corpus's index), so a content hash of the raw dir string rides
     // along with the readable slug
-    val name = grownIndexes.computeIfAbsent((dir, batchMod),
-      _ => s"graft_search_grown_${batchMod}_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + dirHash(dir))
-    grownIndexes.synchronized {
-      if (!spark.catalog.tableExists(s"${name}_postings") ||
-          !graft.sources.FsPaths.exists(spark, grownMarker(spark, name))) {
-        Seq("_postings", "_dl", "_df", "_stats").foreach { suf =>
-          if (spark.catalog.tableExists(name + suf)) spark.sql(s"DROP TABLE $name$suf")
-          graft.sources.FsPaths.deleteRecursively(
-            spark, graft.sources.FsPaths.warehouseTablePath(spark, name + suf))
-        }
-        val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-        buildSearchIndex(spark, docs.filter(col("doc_id") % batchMod =!= 0), name)
-        appendSearchIndex(spark, name, docs.filter(col("doc_id") % batchMod === 0))
-        graft.sources.FsPaths.touch(spark, grownMarker(spark, name))
-      }
+    val name = s"graft_search_grown_${batchMod}_" +
+      dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + dirHash(dir)
+    graft.sources.Artifacts.table(spark,
+        Seq("_postings", "_dl", "_df", "_stats").map(name + _): _*) {
+      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+      buildSearchIndex(spark, docs.filter(col("doc_id") % batchMod =!= 0), name)
+      appendSearchIndex(spark, name, docs.filter(col("doc_id") % batchMod === 0))
     }
     name
   }
@@ -685,11 +671,6 @@ object Search {
     java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8"))
       .take(4).map(b => f"${b & 0xff}%02x").mkString
-
-  private def grownMarker(spark: SparkSession, name: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      graft.sources.FsPaths.warehouseTablePath(spark, s"${name}_postings"),
-      "_GRAFT_GROWN")
 
   /** The registered `search_grown` lane: [[bm25TopKStored]] against the
     * grown (base + appended batch) store.

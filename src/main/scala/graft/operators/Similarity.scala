@@ -809,27 +809,16 @@ object Similarity {
   /** One on-disk IVF index build per (JVM, corpus dir) — index
     * construction is the INGEST step of an IVF deployment; queries (and
     * registry enumeration, bench repeats, plan audits) probe the
-    * existing index rather than rebuilding it. Temp dir removed on JVM
-    * exit.
+    * existing index rather than rebuilding it.
     */
-  private val ivfIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
-
   def ensureIvfIndex(spark: SparkSession, dir: String,
-                     codebookK: Int = CodebookK): String = {
-    // computeIfAbsent only names the path (trivial); the multi-job build
-    // runs under a separate monitor, guarded by the parquet _SUCCESS
-    // marker — never inside the map's bin lock
-    val p = ivfIndexDirs.computeIfAbsent((dir, codebookK),
-      _ => graft.sources.Scratch.tempDir("graft_ivf_idx_"))
-    ivfIndexDirs.synchronized {
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(p, "_SUCCESS")))
-        ivfAssigned(spark, dir, codebookK)
-          .repartition(col("list_id"))
-          .write.mode("overwrite").partitionBy("list_id").parquet(p)
+                     codebookK: Int = CodebookK): String =
+    graft.sources.Artifacts.scratch("graft_ivf_idx_", (dir, codebookK)) { p =>
+      ivfAssigned(spark, dir, codebookK)
+        .repartition(col("list_id"))
+        .write.mode("overwrite").partitionBy("list_id").parquet(p)
+      p
     }
-    p
-  }
 
   /** Append a vector batch to an existing on-disk IVF index: the batch
     * is assigned against the index's codebook (hash-sampled from the
@@ -864,34 +853,19 @@ object Similarity {
     * daily-ingest lifecycle (build once, append batches, probe) as a
     * durable on-disk artifact. Probing it must equal the full rebuild.
     */
-  private val ivfGrownDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), String]()
-
   def ensureGrownIvfIndex(spark: SparkSession, dir: String,
                           codebookK: Int = CodebookK,
-                          batchMod: Int = 7): String = {
-    val p = ivfGrownDirs.computeIfAbsent((dir, codebookK, batchMod),
-      _ => graft.sources.Scratch.tempDir("graft_ivf_grown_"))
-    // explicit completion marker: _SUCCESS exists after the BASE write
-    // already, so it can't distinguish a half-grown index. Resolved via
-    // the index path's own FileSystem (graft.sources.FsPaths) so a
-    // non-local index dir (hdfs://, s3a://) keeps marker and data in
-    // the same namespace.
-    val marker = new org.apache.hadoop.fs.Path(p, "_GRAFT_GROWN")
-    ivfGrownDirs.synchronized {
-      if (!graft.sources.FsPaths.exists(spark, marker)) {
-        val emb = Tables.embeddings(spark, dir)
-        val cent = hashSampleCentroids(emb, codebookK)
-        assignWith(emb.filter(col("vec_id") % batchMod =!= 0), cent)
-          .repartition(col("list_id"))
-          .write.mode("overwrite").partitionBy("list_id").parquet(p)
-        appendIvfIndex(spark, dir, p,
-          emb.filter(col("vec_id") % batchMod === 0), codebookK)
-        graft.sources.FsPaths.touch(spark, marker)
-      }
+                          batchMod: Int = 7): String =
+    graft.sources.Artifacts.scratch("graft_ivf_grown_", (dir, codebookK, batchMod)) { p =>
+      val emb = Tables.embeddings(spark, dir)
+      val cent = hashSampleCentroids(emb, codebookK)
+      assignWith(emb.filter(col("vec_id") % batchMod =!= 0), cent)
+        .repartition(col("list_id"))
+        .write.mode("overwrite").partitionBy("list_id").parquet(p)
+      appendIvfIndex(spark, dir, p,
+        emb.filter(col("vec_id") % batchMod === 0), codebookK)
+      p
     }
-    p
-  }
 
   /** The ann_ivf_append registry row: top-k probes against the grown
     * (base + appended batch) index — same oracle SQL as [[ivfTopK]]
@@ -913,29 +887,19 @@ object Similarity {
     * compacted index must match exactly (IVF is exact within probed
     * lists, so deletion costs no recall on the survivors).
     */
-  private val ivfDeletedDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), String]()
-
   def ensureDeletedIvfIndex(spark: SparkSession, dir: String,
                             codebookK: Int = CodebookK,
-                            delMod: Int = 97): String = {
-    val p = ivfDeletedDirs.computeIfAbsent((dir, codebookK, delMod),
-      _ => graft.sources.Scratch.tempDir("graft_ivf_del_"))
-    val marker = new org.apache.hadoop.fs.Path(p, "_GRAFT_DELETED")
-    ivfDeletedDirs.synchronized {
-      if (!graft.sources.FsPaths.exists(spark, marker)) {
-        ivfAssigned(spark, dir, codebookK)
-          .repartition(col("list_id"))
-          .write.mode("overwrite").partitionBy("list_id").parquet(p)
-        deleteFromIvfIndex(spark, p,
-          Tables.embeddings(spark, dir)
-            .filter(col("vec_id") % delMod === 0).select(col("vec_id")))
-        compactIvfIndex(spark, p)
-        graft.sources.FsPaths.touch(spark, marker)
-      }
+                            delMod: Int = 97): String =
+    graft.sources.Artifacts.scratch("graft_ivf_del_", (dir, codebookK, delMod)) { p =>
+      ivfAssigned(spark, dir, codebookK)
+        .repartition(col("list_id"))
+        .write.mode("overwrite").partitionBy("list_id").parquet(p)
+      deleteFromIvfIndex(spark, p,
+        Tables.embeddings(spark, dir)
+          .filter(col("vec_id") % delMod === 0).select(col("vec_id")))
+      compactIvfIndex(spark, p)
+      p
     }
-    p
-  }
 
   /** The `ann_ivf_deleted` registry row: pruned top-k probe of the
     * deleted-and-compacted index.

@@ -112,7 +112,7 @@ object TextOps {
     * no engine-specific regex.
     */
   def gopherRules(spark: SparkSession, dir: String): DataFrame =
-    gopherRulesOf(Tables.documentsWide(spark, dir))
+    gopherRulesOf(Tables.documents(spark, dir, wide = true))
 
   /** The four Gopher document-rule bit columns over a `text` column —
     * shared by [[gopherRulesOf]] and the rule-matrix capstone
@@ -154,7 +154,7 @@ object TextOps {
     * AND-able column, no extra pass over the data.
     */
   def repetitionRules(spark: SparkSession, dir: String): DataFrame =
-    repetitionRulesOf(Tables.documentsWide(spark, dir))
+    repetitionRulesOf(Tables.documents(spark, dir, wide = true))
 
   private[graft] val RepetitionPct: Seq[(String, Int)] = Seq(
     "top2" -> 20, "top3" -> 18, "top4" -> 16, "dup5" -> 15, "dup6" -> 14,
@@ -712,47 +712,29 @@ object TextOps {
     * later job — a fresh JVM, a streaming ingest — loads the small
     * store instead of re-paying the corpus gram explode. Two warehouse
     * parquet tables (the eval splits' distinct md5 grams; the train
-    * docs' covered token positions), fingerprint-gated on the input
-    * corpus and (re)built atomically via temp-dir + rename — the
-    * [[ensureBpeVocabStore]] discipline verbatim. Returns
+    * docs' covered token positions), each a
+    * [[graft.sources.Artifacts.corpusStore]]. Returns
     * (evalGramsPath, coveredPath).
     */
   def ensureDeconStores(spark: SparkSession, dir: String,
                         n: Int = 13): (String, String) = {
-    import graft.sources.FsPaths
-    import org.apache.hadoop.fs.Path
+    import graft.sources.{Artifacts, FsPaths}
+    val corpus = s"$dir/documents.parquet"
     val evalPath = FsPaths.warehouseTablePath(spark,
       s"graft_decon_evalgrams_${n}_" + Search.dirHash(dir))
     val covPath = FsPaths.warehouseTablePath(spark,
       s"graft_decon_covered_${n}_" + Search.dirHash(dir))
-    // JVM-local monitor (cheap intra-process serialization) + the
-    // cross-JVM file lock: two processes sharing one warehouse
-    // serialize their builds; the fingerprint re-check inside the lock
-    // makes the loser a no-op load
-    deconStoreLock.synchronized {
-      FsPaths.withFileLock(spark,
-        new Path(evalPath.getParent, evalPath.getName + ".lock")) {
-      val fp = FsPaths.dirFingerprint(spark, s"$dir/documents.parquet")
-      if (!FsPaths.readString(spark, new Path(evalPath, "_GRAFT_COMPLETE")).contains(fp)) {
-        FsPaths.replaceDirAtomically(spark, evalPath) { tmp =>
-          deconGrams(spark, dir, n).filter(col("split") =!= "train")
-            .select(col("gh")).distinct()
-            .write.mode("overwrite").parquet(tmp.toString)
-          FsPaths.writeString(spark, new Path(tmp, "_GRAFT_COMPLETE"), fp)
-        }
-      }
-      if (!FsPaths.readString(spark, new Path(covPath, "_GRAFT_COMPLETE")).contains(fp)) {
-        FsPaths.replaceDirAtomically(spark, covPath) { tmp =>
-          deconCutCoveredCompute(spark, dir, n)
-            .write.mode("overwrite").parquet(tmp.toString)
-          FsPaths.writeString(spark, new Path(tmp, "_GRAFT_COMPLETE"), fp)
-        }
-      }
-      }
+    Artifacts.corpusStore(spark, evalPath, corpus) { tmp =>
+      deconGrams(spark, dir, n).filter(col("split") =!= "train")
+        .select(col("gh")).distinct()
+        .write.mode("overwrite").parquet(tmp.toString)
+    }
+    Artifacts.corpusStore(spark, covPath, corpus) { tmp =>
+      deconCutCoveredCompute(spark, dir, n)
+        .write.mode("overwrite").parquet(tmp.toString)
     }
     (evalPath.toString, covPath.toString)
   }
-  private val deconStoreLock = new Object
 
   /** The persisted eval gram set as a frame — the static side a fresh
     * JVM or a streaming ingest flags against without any corpus pass.
@@ -879,7 +861,7 @@ object TextOps {
     * two hash-aggs, linear in corpus bytes.
     */
   def charTrigramScore(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documentsWide(spark, dir)
+    val docs = Tables.documents(spark, dir, wide = true)
     // staged once: the exploded trigram frame feeds BOTH the count
     // build and the scoring join — without the memo each branch would
     // re-scan and re-explode the corpus
@@ -1001,7 +983,7 @@ object TextOps {
     */
   def piiScrub(spark: SparkSession, dir: String): DataFrame =
     piiScrubOf(piiSeeded(
-      Tables.documentsWide(spark, dir).select(col("doc_id"), col("text"))))
+      Tables.documents(spark, dir, wide = true).select(col("doc_id"), col("text"))))
 
   /** The curation-report face of the scrub lane: per-source scrub
     * volume (docs touched, spans per class) — the third drop/transform
@@ -1009,7 +991,7 @@ object TextOps {
     */
   def piiReport(spark: SparkSession, dir: String): DataFrame =
     piiReportAggOf(piiScrubOf(piiSeeded(
-      Tables.documentsWide(spark, dir).select(col("doc_id"), col("source"), col("text")))))
+      Tables.documents(spark, dir, wide = true).select(col("doc_id"), col("source"), col("text")))))
       .orderBy(col("source"))
 
   /** The report aggregation over a scrubbed frame, unordered — shared
@@ -1171,7 +1153,7 @@ object TextOps {
     * ([[graft.SparkEntry]] builds it programmatically per round).
     */
   def bpeTrain(spark: SparkSession, dir: String, merges: Int = 8): DataFrame =
-    bpeTrainOf(Tables.documentsWide(spark, dir), merges)
+    bpeTrainOf(Tables.documents(spark, dir, wide = true), merges)
 
   /** [[bpeTrain]] over any (doc_id, text) frame — spec entry point. */
   private[graft] def bpeTrainOf(docs: DataFrame, merges: Int): DataFrame = {
@@ -1281,7 +1263,7 @@ object TextOps {
 
   private def mergesFor(spark: SparkSession, dir: String, merges: Int): Seq[BpeMerge] =
     bpeMergeCache.computeIfAbsent((dir, merges),
-      _ => bpeMergesOf(Tables.documentsWide(spark, dir), merges))
+      _ => bpeMergesOf(Tables.documents(spark, dir, wide = true), merges))
 
   /** Warm the merge memo (the training half of the encode lanes) —
     * registered as the bench stage builder for `text_bpe_encode` /
@@ -1295,54 +1277,33 @@ object TextOps {
     * memo cannot provide: real pipelines train a tokenizer ONCE and
     * ship the vocabulary as a durable artifact every later job loads
     * (HuggingFace's `tokenizer.json`, tiktoken's `.tiktoken` files).
-    * The trained merge list persists as a parquet table under the
-    * warehouse with a completion marker carrying the input corpus's
-    * fingerprint ([[graft.sources.FsPaths.dirFingerprint]] — the
-    * cross-JVM-store discipline of the stream-matrix sink): a later
-    * JVM LOADS the 8-row table instead of re-running the corpus-sized
-    * training loop, and a regenerated corpus rebuilds instead of being
-    * served a stale vocabulary. Loaded merges are fed into the same
-    * per-JVM cache [[mergesFor]] trains into, so every encode path
-    * (`bpeEncode`, the packers, [[maxMatchEncode]]) is artifact-backed
-    * with zero code change at the call sites.
+    * The trained merge list persists as a parquet
+    * [[graft.sources.Artifacts.corpusStore]] under the warehouse: a
+    * later JVM LOADS the 8-row table instead of re-running the
+    * corpus-sized training loop, and a regenerated corpus rebuilds
+    * instead of being served a stale vocabulary. Loaded merges are fed
+    * into the same per-JVM cache [[mergesFor]] trains into, so every
+    * encode path (`bpeEncode`, the packers, [[maxMatchEncode]]) is
+    * artifact-backed with zero code change at the call sites.
     */
   def ensureBpeVocabStore(spark: SparkSession, dir: String,
                           merges: Int = 8): Seq[BpeMerge] = {
-    import graft.sources.FsPaths
-    val path = FsPaths.warehouseTablePath(spark,
+    val path = graft.sources.FsPaths.warehouseTablePath(spark,
       s"graft_bpe_vocab_${merges}_" + Search.dirHash(dir))
-    val marker = new org.apache.hadoop.fs.Path(path, "_GRAFT_COMPLETE")
-    // JVM monitor + cross-JVM file lock (the ensureDeconStores
-    // discipline): warehouse-shared builds never interleave
-    vocabStoreLock.synchronized {
-      FsPaths.withFileLock(spark,
-        new org.apache.hadoop.fs.Path(path.getParent, path.getName + ".lock")) {
-      val fp = FsPaths.dirFingerprint(spark, s"$dir/documents.parquet")
-      if (FsPaths.readString(spark, marker).contains(fp)) {
-        bpeMergeCache.computeIfAbsent((dir, merges), _ =>
-          spark.read.parquet(path.toString)
-            .orderBy(col("rank")).collect().toSeq.map(r => BpeMerge(
-              r.getAs[Int]("rank"), r.getAs[String]("pair"),
-              r.getAs[String]("newChar"), r.getAs[String]("left"),
-              r.getAs[String]("right"), r.getAs[String]("token"),
-              r.getAs[Long]("n"))))
-      } else {
-        val ms = mergesFor(spark, dir, merges)
-        import spark.implicits._
-        // temp-dir build + rename: a concurrent cross-JVM reader never
-        // sees the store between delete and rewrite (ADVICE r12)
-        FsPaths.replaceDirAtomically(spark, path) { tmp =>
-          ms.toDF("rank", "pair", "newChar", "left", "right", "token", "n")
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          FsPaths.writeString(spark,
-            new org.apache.hadoop.fs.Path(tmp, "_GRAFT_COMPLETE"), fp)
-        }
-        ms
-      }
-      }
-    }
+    graft.sources.Artifacts.corpusStore(spark, path, s"$dir/documents.parquet") { tmp =>
+      val ms = mergesFor(spark, dir, merges)
+      import spark.implicits._
+      ms.toDF("rank", "pair", "newChar", "left", "right", "token", "n")
+        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      ms
+    }.getOrElse(bpeMergeCache.computeIfAbsent((dir, merges), _ =>
+      spark.read.parquet(path.toString)
+        .orderBy(col("rank")).collect().toSeq.map(r => BpeMerge(
+          r.getAs[Int]("rank"), r.getAs[String]("pair"),
+          r.getAs[String]("newChar"), r.getAs[String]("left"),
+          r.getAs[String]("right"), r.getAs[String]("token"),
+          r.getAs[Long]("n")))))
   }
-  private val vocabStoreLock = new Object
 
   /** Spec seam: forget the per-JVM trained merges for `dir`, forcing
     * the next [[ensureBpeVocabStore]] through the LOAD path (a fresh
@@ -1475,7 +1436,7 @@ object TextOps {
     */
   def bpeByteTrain(spark: SparkSession, dir: String, merges: Int = 8): DataFrame = {
     import spark.implicits._
-    bpeByteMergesOf(Tables.documentsWide(spark, dir), merges)
+    bpeByteMergesOf(Tables.documents(spark, dir, wide = true), merges)
       .map(m => (m.rank.toLong, m.left, m.right, m.token, m.n))
       .toDF("merge_rank", "left", "right", "new_token", "n")
   }
@@ -1486,7 +1447,7 @@ object TextOps {
   private def byteMergesFor(spark: SparkSession, dir: String,
                             merges: Int): Seq[BpeMerge] =
     bpeByteMergeCache.computeIfAbsent((dir, merges),
-      _ => bpeByteMergesOf(Tables.documentsWide(spark, dir), merges))
+      _ => bpeByteMergesOf(Tables.documents(spark, dir, wide = true), merges))
 
   /** Warm the byte-merge memo — bench stage builder for
     * `text_bpe_bytes_encode`.
@@ -1519,7 +1480,7 @@ object TextOps {
     */
   def bpeByteEncode(spark: SparkSession, dir: String, merges: Int = 8): DataFrame = {
     val ms = byteMergesFor(spark, dir, merges)
-    Tables.documentsWide(spark, dir)
+    Tables.documents(spark, dir, wide = true)
       .select(col("doc_id"),
         octet_length(col("text")).cast("bigint").as("n_bytes"),
         bpeByteTokenCount(ms).as("n_bpe_byte_tokens"))
@@ -1554,7 +1515,7 @@ object TextOps {
     */
   def bpeEncode(spark: SparkSession, dir: String, merges: Int = 8): DataFrame = {
     val ms = mergesFor(spark, dir, merges)
-    Tables.documentsWide(spark, dir)
+    Tables.documents(spark, dir, wide = true)
       .filter(!col("text").rlike("[\\uE000-\\uF8FF]"))
       .select(col("doc_id"),
         length(col("text")).cast("bigint").as("n_chars"),
@@ -1766,7 +1727,7 @@ object TextOps {
   private[operators] def cdcChunks(spark: SparkSession, dir: String,
                                    mask: Int = 8): DataFrame =
     StageMemo.memoized(spark, s"cdc_chunks_$mask", dir)(
-      cdcChunkRows(Tables.documentsWide(spark, dir), mask))
+      cdcChunkRows(Tables.documents(spark, dir, wide = true), mask))
 
   /** Bench build seam for the scrub lanes: materialize the chunk
     * stage (and for the capstone, the scrub output itself).
@@ -1849,36 +1810,18 @@ object TextOps {
     * scrubbing from it must equal the in-memory one-shot scrub (the
     * dedup_cdc_grown oracle row's gate, SQL shared verbatim).
     */
-  private val grownChunkTables =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
-
   private[graft] def ensureGrownChunkIndex(spark: SparkSession, dir: String,
                                            batchMod: Int = 5): String = {
-    val name = grownChunkTables.computeIfAbsent((dir, batchMod),
-      _ => s"graft_chunk_grown_${batchMod}_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-    grownChunkTables.synchronized {
-      // marker AFTER the append is the completion check — tableExists
-      // alone cannot distinguish a half-grown store (see the shingle
-      // twin, MinHash.ensureGrownShingleIndex)
-      if (!spark.catalog.tableExists(name) ||
-          !graft.sources.FsPaths.exists(spark, chunkMarker(spark, name))) {
-        if (spark.catalog.tableExists(name)) spark.sql(s"DROP TABLE $name")
-        graft.sources.FsPaths.deleteRecursively(
-          spark, graft.sources.FsPaths.warehouseTablePath(spark, name))
-        val docs = Tables.documents(spark, dir)
-        graft.sources.BucketedTables.writeBucketed(
-          cdcChunkRows(docs.filter(col("doc_id") % batchMod =!= 0)),
-          name, "doc_id", 32)
-        appendChunkIndex(name, docs.filter(col("doc_id") % batchMod === 0))
-        graft.sources.FsPaths.touch(spark, chunkMarker(spark, name))
-      }
+    val name = s"graft_chunk_grown_${batchMod}_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+    graft.sources.Artifacts.table(spark, name) {
+      val docs = Tables.documents(spark, dir)
+      graft.sources.BucketedTables.writeBucketed(
+        cdcChunkRows(docs.filter(col("doc_id") % batchMod =!= 0)),
+        name, "doc_id", 32)
+      appendChunkIndex(name, docs.filter(col("doc_id") % batchMod === 0))
     }
     name
   }
-
-  private def chunkMarker(spark: SparkSession, table: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      graft.sources.FsPaths.warehouseTablePath(spark, table), "_GRAFT_GROWN")
 
   /** [[cdcScrub]] reading the persisted grown chunk store instead of
     * re-segmenting the corpus: the scrub's corpus-sized stage (explode
@@ -1911,7 +1854,7 @@ object TextOps {
     // round-robin exchange measured +0.4 s on the probe)
     spanCutImpl(Tables.documents(spark, dir), k,
       (name, df) => StageMemo.memoized(spark, s"span_${name}_$k", dir)(df),
-      gramDocs = Tables.documentsWide(spark, dir))
+      gramDocs = Tables.documents(spark, dir, wide = true))
 
   private[graft] def spanCutOf(docs: DataFrame, k: Int = 5): DataFrame =
     spanCutImpl(docs, k, (_, df) => df)
@@ -1983,7 +1926,7 @@ object TextOps {
   def spanRuns(spark: SparkSession, dir: String, k: Int = 5, minLen: Int = 50): DataFrame =
     spanRunsImpl(Tables.documents(spark, dir), k, minLen,
       (name, df) => StageMemo.memoized(spark, s"span_${name}_$k", dir)(df),
-      gramDocs = Tables.documentsWide(spark, dir))
+      gramDocs = Tables.documents(spark, dir, wide = true))
 
   private[graft] def spanRunsOf(docs: DataFrame, k: Int = 5, minLen: Int = 50): DataFrame =
     spanRunsImpl(docs, k, minLen, (_, df) => df)
@@ -2081,7 +2024,7 @@ object TextOps {
     // (session, corpus), probes read the staged pair-span frame
     StageMemo.memoized(spark,
         s"span_substr_${k}_${minLen}_$dfCap", dir)(
-      substringSpansImpl(Tables.documentsWide(spark, dir), k, minLen, dfCap,
+      substringSpansImpl(Tables.documents(spark, dir, wide = true), k, minLen, dfCap,
         (name, df) => StageMemo.memoized(spark, s"span_${name}_$k", dir)(df)))
 
   private[graft] def substringSpansOf(docs: DataFrame, k: Int = 5,

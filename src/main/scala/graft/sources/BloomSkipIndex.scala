@@ -39,13 +39,6 @@ object BloomSkipIndex {
   val M = 8192
   val J = 4
 
-  /** One built index per (JVM, source dir): the layout dir plus, per
-    * file, the bloom bit SET (a small Set[Int] here; the packed
-    * long-array form is an encoding detail the tests don't need).
-    */
-  private val indexes =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Map[String, Set[Int]])]()
-
   /** The j bit positions of one key, as a Spark expression (build side):
     * position h = md5("h|key") first 15 hex digits mod m — exactly
     * [[bitPositions]]' arithmetic, so driver probe and executor build
@@ -69,16 +62,15 @@ object BloomSkipIndex {
   /** Build (once per JVM+dir): write the hash-distributed layout (the
     * ingest-order shape — each file holds a scattered slice of the key
     * domain) and record, per file, the distinct bloom bits of its
-    * `event_id`s.
+    * `event_id`s (a small Set[Int] here; the packed long-array form is
+    * an encoding detail the tests don't need).
     */
   def ensureBloomIndex(spark: SparkSession, dir: String,
                        nFiles: Int = 8): (String, Map[String, Set[Int]]) =
-    indexes.computeIfAbsent(dir, { _ =>
-      val p = Scratch.tempDir("graft_bloomskip_")
+    Artifacts.scratch("graft_bloomskip_", dir) { dataDir =>
       graft.Tables.events(spark, dir)
         .repartition(nFiles, col("event_id"))
-        .write.mode("overwrite").parquet(p.toString)
-      val dataDir = p.toString
+        .write.mode("overwrite").parquet(dataDir)
       val bits = spark.read.parquet(dataDir)
         .select(input_file_name().as("path"),
           explode(array(posCols(col("event_id")): _*)).as("bit"))
@@ -87,7 +79,7 @@ object BloomSkipIndex {
         .groupBy(_.getString(0))
         .map { case (p, rows) => p -> rows.map(_.getInt(1)).toSet }
       (dataDir, bits)
-    })
+    }
 
   /** Point-lookup read through the bloom index: only files whose bloom
     * has ALL j bits of at least one probed key are opened; the exact

@@ -112,18 +112,6 @@ object CdcMerge {
     days
   }
 
-  /** The oracle-gated row: a deterministic CDC batch (derived purely
-    * from the events table, so DuckDB can re-derive it) applied to a
-    * FRESH copy of the dated layout, then summarized per day over the
-    * merged store. Within a 3-day window: event_id % 13 == 0 rows are
-    * upserted with value + 1000, % 17 == 0 rows deleted (delete beats a
-    * same-key upsert, as in any MERGE), % 19 == 0 rows cloned as inserts
-    * under key + 10^7. A green row proves the pruned-read merge path end
-    * to end: layout copy → touched-day rewrite → re-read.
-    */
-  private val mergeScratch =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Per-(JVM, dir) MUTABLE copy of the dated layout — the merge's
     * target. Built once (the bench stage builder pays the full copy);
     * repeat probes then [[resetWindow]] only the merge window's day
@@ -134,13 +122,12 @@ object CdcMerge {
     * days), not O(table).
     */
   def ensureMergeScratch(spark: SparkSession, dir: String): String =
-    mergeScratch.computeIfAbsent(dir, { _ =>
+    Artifacts.scratch("graft_cdc_merge_", dir) { p =>
       val src = TimePartitionedStore.ensureDatedLayout(spark, dir)
-      val p = Scratch.tempDir("graft_cdc_merge_")
       spark.read.parquet(src).write.mode("overwrite")
         .partitionBy("event_date").parquet(p)
       p
-    })
+    }
 
   /** Restore `[from, until]`'s day directories in the scratch store
     * from the pristine layout (ISO dates compare lexicographically, so
@@ -184,6 +171,15 @@ object CdcMerge {
   private val mergeLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
+  /** The oracle-gated row: a deterministic CDC batch (derived purely
+    * from the events table, so DuckDB can re-derive it) applied to a
+    * FRESH copy of the dated layout, then summarized per day over the
+    * merged store. Within a 3-day window: event_id % 13 == 0 rows are
+    * upserted with value + 1000, % 17 == 0 rows deleted (delete beats a
+    * same-key upsert, as in any MERGE), % 19 == 0 rows cloned as inserts
+    * under key + 10^7. A green row proves the pruned-read merge path end
+    * to end: layout copy → touched-day rewrite → re-read.
+    */
   def cdcMergeSummary(spark: SparkSession, dir: String,
                       from: String = "2024-01-08",
                       until: String = "2024-01-10"): DataFrame =

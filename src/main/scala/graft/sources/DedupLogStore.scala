@@ -111,30 +111,14 @@ object DedupLogStore {
 
   /** One compacted log per (JVM, corpus dir, format) — the ingest seam
     * of the registry row, so the bench can time the append+compact
-    * build apart from the read-back probe (same lifecycle as
-    * [[graft.operators.MinHash.ensureGrownShingleIndex]]): a fresh
-    * Verify JVM still exercises the full write→compact→read trip; bench
-    * repeat passes probe the already-built store. Completion marker per
-    * the grown-store pattern (_SUCCESS lands after the BASE append
-    * already, so only an explicit post-compact marker proves the trip
-    * finished).
+    * build apart from the read-back probe: a fresh Verify JVM still
+    * exercises the full write→compact→read trip; bench repeat passes
+    * probe the already-built store.
     */
-  private val compactedDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   def ensureCompactedLog(spark: SparkSession, dir: String,
-                         format: String = "parquet"): String = {
-    val p = compactedDirs.computeIfAbsent((dir, format),
-      _ => Scratch.tempDir("graft_dedup_log_"))
-    val marker = new org.apache.hadoop.fs.Path(p, "_GRAFT_COMPACTED")
-    compactedDirs.synchronized {
-      if (!FsPaths.exists(spark, marker)) {
-        buildCompactedLog(spark, dir, format, p)
-        FsPaths.touch(spark, marker)
-      }
-    }
-    s"$p/compacted"
-  }
+                         format: String = "parquet"): String =
+    Artifacts.scratch("graft_dedup_log_", (dir, format))(
+      buildCompactedLog(spark, dir, format, _))
 
   /** Derive attempts → append → compact into `tmp/compacted`; returns
     * the compacted path.

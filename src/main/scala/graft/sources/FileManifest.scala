@@ -24,13 +24,9 @@ object FileManifest {
   /** Range-clustered layout + its manifest; one per (JVM, source dir).
     * Returns (dataDir, manifest rows).
     */
-  private val layouts =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Seq[(String, Long, Long)])]()
-
   def ensureClusteredLayout(spark: SparkSession, dir: String,
                             nFiles: Int = 8): (String, Seq[(String, Long, Long)]) =
-    layouts.computeIfAbsent(dir, { _ =>
-      val p = Scratch.tempDir("graft_manifest_")
+    Artifacts.scratch("graft_manifest_", dir) { p =>
       Tables.events(spark, dir)
         .repartitionByRange(nFiles, col("user_id"))
         .write.mode("overwrite").parquet(p)
@@ -43,8 +39,8 @@ object FileManifest {
         .agg(min(col("user_id")).as("lo"), max(col("user_id")).as("hi"))
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-      (p.toString, manifest)
-    })
+      (p, manifest)
+    }
 
   /** Keyed read through the manifest: only files whose [lo, hi] covers
     * the key are handed to the scan. Returns the pruned DataFrame; the

@@ -12,6 +12,10 @@ import org.apache.spark.sql.SparkSession
   * from the session's Hadoop configuration, so the same code serves
   * local test runs and object-store deployments. FsPathsSpec pins the
   * non-`file:` case via a RawLocalFileSystem-backed mock scheme.
+  *
+  * The build-once policy over these helpers — which lifetime a store
+  * has, when it rebuilds, which lock it takes — lives in [[Artifacts]];
+  * stores call it rather than these primitives.
   */
 object FsPaths {
 
@@ -106,10 +110,10 @@ object FsPaths {
     * only then deleted; the next create race picks exactly one new
     * holder.
     *
-    * Pair with the existing marker-gated, temp-dir+rename build
-    * discipline: the lock serializes BUILDERS, the completion marker
+    * [[Artifacts.table]] and [[Artifacts.corpusStore]] pair it with
+    * their completion markers: the lock serializes BUILDERS, the marker
     * re-check inside the lock makes the second builder a no-op, and
-    * the atomic rename keeps READERS safe even across the break
+    * [[replaceDirAtomically]] keeps READERS safe even across the break
     * window.
     */
   def withFileLock[T](spark: SparkSession, lock: Path,
@@ -188,9 +192,9 @@ object FsPaths {
 
   /** Content fingerprint of an input dataset DIRECTORY: md5 over the
     * sorted (relative name, size, mtime) listing — cheap (metadata
-    * only), and any regeneration of the inputs moves it. Cross-JVM
-    * persisted stores gate their markers on this so a regenerated
-    * corpus can never be served from a stale store.
+    * only), and any regeneration of the inputs moves it.
+    * [[Artifacts.corpusStore]] gates its marker on this so a
+    * regenerated corpus can never be served from a stale store.
     */
   def dirFingerprint(spark: SparkSession, dir: String): String = {
     val p = new Path(dir)

@@ -48,17 +48,13 @@ object JsonlIngest {
 
   /** One corrupted-JSONL dump per (JVM, source dir): the write is a full
     * Spark job, so registry enumeration (plan audits, bench, verify all
-    * construct every query) must not re-run it — and the temp dir is
-    * deleted on JVM exit instead of leaking one per enumeration.
+    * construct every query) must not re-run it.
     */
-  private val writtenDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def corruptedJsonlDir(spark: SparkSession, dir: String): String =
-    writtenDirs.computeIfAbsent(dir, { _ =>
-      val p = Scratch.tempDir("graft_jsonl_")
+    Artifacts.scratch("graft_jsonl_", dir) { p =>
       writeCorrupted(spark, dir, p)
       p
-    })
+    }
 
   /** The oracle-gated round trip: per-lane counts + exact n_chars sums
     * (quarantined lines contribute 0 — their fields are null by

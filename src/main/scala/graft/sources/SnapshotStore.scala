@@ -390,9 +390,6 @@ object SnapshotStore {
     builtThreeVersionStore(spark, dir, "2024-01-08", "2024-01-10"); ()
   }
 
-  private val threeVersionStores =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), String]()
-
   /** The deterministic three-version drill store shared by the
     * time-travel and change-feed lanes — built once per (dir, window)
     * per JVM (after its two commits it is immutable, so sharing is
@@ -400,8 +397,7 @@ object SnapshotStore {
     */
   private def builtThreeVersionStore(spark: SparkSession, dir: String,
                                      from: String, until: String): String =
-    threeVersionStores.computeIfAbsent((dir, from, until), { _ =>
-      val store = Scratch.tempDir("graft_snapshot_")
+    Artifacts.scratch("graft_snapshot_", (dir, from, until)) { store =>
       val base = graft.Tables.events(spark, dir)
         .filter(to_date(col("ts")) >= lit(from) && to_date(col("ts")) <= lit(until))
         .select(col("event_id"), col("event_type"), col("value"))
@@ -418,5 +414,5 @@ object SnapshotStore {
       commit(spark, store, batch(readAt(spark, store, 1), 23, 11, 5000.0),
         "event_id", expectedVersion = 1)
       store
-    })
+    }
 }

@@ -23,20 +23,14 @@ import graft.Tables
   */
 object TimePartitionedStore {
 
-  /** One dated-layout materialization per (JVM, source dir); temp dir
-    * removed on exit (same lifecycle as the IVF and JSONL stores).
-    */
-  private val storeDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  /** One dated-layout materialization per (JVM, source dir). */
   def ensureDatedLayout(spark: SparkSession, dir: String): String =
-    storeDirs.computeIfAbsent(dir, { _ =>
-      val p = Scratch.tempDir("graft_dated_events_")
+    Artifacts.scratch("graft_dated_events_", dir) { p =>
       Tables.events(spark, dir)
         .withColumn("event_date", to_date(col("ts")))
         .write.mode("overwrite").partitionBy("event_date").parquet(p)
       p
-    })
+    }
 
   /** Incrementally-maintained daily rollup — materialized-view
     * maintenance in miniature: per-(day, type) partial aggregates
@@ -47,34 +41,25 @@ object TimePartitionedStore {
     * day×type partial rows: partials are algebraic (SUM/COUNT), so
     * maintenance cost is one day's data per day, not a recompute.
     */
-  private val rollupDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def ensureDailyRollup(spark: SparkSession, dir: String): String = {
-    val p = rollupDirs.computeIfAbsent(dir, _ => Scratch.tempDir("graft_rollup_"))
-    val marker = java.nio.file.Paths.get(p, "_GRAFT_ROLLUP")
-    rollupDirs.synchronized {
-      if (!java.nio.file.Files.exists(marker)) {
-        val agg = Tables.events(spark, dir)
-          .withColumn("event_date", to_date(col("ts")))
-          .groupBy(col("event_date"), col("event_type"))
-          .agg(count(lit(1)).as("n_events"),
-            sum((col("value").cast("decimal(18,2)") * 100).cast("bigint"))
-              .as("value_cents"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // base days first, then the max day appended — the daily-ingest
-        // lifecycle, so the append path is what the row actually gates
-        val maxDay = agg.agg(max(col("event_date"))).head.getDate(0)
-        agg.filter(col("event_date") < lit(maxDay))
-          .write.mode("overwrite").partitionBy("event_date").parquet(p)
-        agg.filter(col("event_date") === lit(maxDay))
-          .write.mode("append").partitionBy("event_date").parquet(p)
-        agg.unpersist()
-        java.nio.file.Files.createFile(marker)
-      }
+  def ensureDailyRollup(spark: SparkSession, dir: String): String =
+    Artifacts.scratch("graft_rollup_", dir) { p =>
+      val agg = Tables.events(spark, dir)
+        .withColumn("event_date", to_date(col("ts")))
+        .groupBy(col("event_date"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          sum((col("value").cast("decimal(18,2)") * 100).cast("bigint"))
+            .as("value_cents"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // base days first, then the max day appended — the daily-ingest
+      // lifecycle, so the append path is what the row actually gates
+      val maxDay = agg.agg(max(col("event_date"))).head.getDate(0)
+      agg.filter(col("event_date") < lit(maxDay))
+        .write.mode("overwrite").partitionBy("event_date").parquet(p)
+      agg.filter(col("event_date") === lit(maxDay))
+        .write.mode("append").partitionBy("event_date").parquet(p)
+      agg.unpersist()
+      p
     }
-    p
-  }
 
   /** The oracle-gated row: corpus totals merged from the rollup's
     * partial aggregates — must equal a direct aggregation of the raw

@@ -66,6 +66,20 @@ object StreamingCuration {
   def c4Report(stream: DataFrame): DataFrame =
     TextOps.c4ReportAggOf(c4Gated(stream))
 
+  /** Stage the corpus as four splittable files for the streaming run —
+    * the ingest-side artifact (a production stream's input layout),
+    * registered as the lane's bench builder.
+    */
+  def ensureStreamMatrixInput(spark: org.apache.spark.sql.SparkSession,
+                              dir: String): String =
+    graft.sources.Artifacts.scratch("graft-stream-matrix", dir) { in =>
+      import org.apache.spark.sql.functions.col
+      graft.Tables.documents(spark, dir)
+        .select(col("doc_id"), col("source"), col("text"))
+        .repartitionByRange(4, col("doc_id")).write.mode("overwrite").parquet(in)
+      in
+    }
+
   /** ORACLE-GATED end-to-end run of [[matrixReport]] (`stream_rule_
     * matrix`): the corpus is staged as four splittable files, streamed
     * back one file per trigger (four genuine micro-batches through the
@@ -79,24 +93,6 @@ object StreamingCuration {
     * gates, |sources| state rows); the collect at the end is the
     * report itself — catalog cardinality, never corpus rows.
     */
-  private val matrixInputs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Stage the corpus as four splittable files for the streaming run —
-    * the ingest-side artifact (a production stream's input layout),
-    * registered as the lane's bench builder.
-    */
-  def ensureStreamMatrixInput(spark: org.apache.spark.sql.SparkSession,
-                              dir: String): String =
-    matrixInputs.computeIfAbsent(dir, { _ =>
-      import org.apache.spark.sql.functions.col
-      val in = java.nio.file.Files.createTempDirectory("graft-stream-matrix").toString
-      graft.Tables.documents(spark, dir)
-        .select(col("doc_id"), col("source"), col("text"))
-        .repartitionByRange(4, col("doc_id")).write.mode("overwrite").parquet(in)
-      in
-    })
-
   def matrixReportEndToEnd(spark: org.apache.spark.sql.SparkSession,
                            dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
@@ -131,44 +127,17 @@ object StreamingCuration {
     * sf10 probe total), which is build-side cost by this engine's own
     * build/probe accounting (BenchProtocol).
     */
-  private val matrixSinkLock = new Object
-
   def ensureStreamMatrixSink(spark: org.apache.spark.sql.SparkSession,
                              dir: String): String = {
     // staged under the warehouse like every other persisted store —
     // a java.nio temp dir is a DRIVER-local path string that Spark
     // resolves against fs.defaultFS at write time, so on any
     // non-local-FS deployment the created dir and the written path
-    // diverge (and nothing ever cleaned the sink up). Marker-gated:
-    // a half-written sink from a failed run rebuilds; dirHash keeps
-    // distinct corpora on distinct sinks.
-    import graft.sources.FsPaths
-    val path = FsPaths.warehouseTablePath(spark,
+    // diverge; dirHash keeps distinct corpora on distinct sinks
+    val path = graft.sources.FsPaths.warehouseTablePath(spark,
       "graft_stream_matrix_sink_" + graft.operators.Search.dirHash(dir))
-    val marker = new org.apache.hadoop.fs.Path(path, "_GRAFT_COMPLETE")
-    matrixSinkLock.synchronized {
-      // JVM monitor + cross-JVM file lock (the ensureDeconStores
-      // discipline): two warehouse-sharing processes serialize the
-      // build, and the fingerprint re-check makes the loser a no-op
-      FsPaths.withFileLock(spark,
-        new org.apache.hadoop.fs.Path(path.getParent, path.getName + ".lock")) {
-      // unlike the catalog-table stores (whose in-memory catalog forgets
-      // them per JVM, forcing a rebuild), a bare parquet sink SURVIVES
-      // across JVMs — so the completion marker carries the input
-      // corpus's fingerprint, and a regenerated corpus rebuilds instead
-      // of being served stale rows
-      val fp = FsPaths.dirFingerprint(spark, s"$dir/documents.parquet")
-      if (!FsPaths.readString(spark, marker).contains(fp)) {
-        // temp-dir build + rename: cross-JVM readers never observe the
-        // sink between delete and rewrite (ADVICE r12)
-        FsPaths.replaceDirAtomically(spark, path) { tmp =>
-          matrixReportEndToEnd(spark, dir)
-            .write.mode("overwrite").parquet(tmp.toString)
-          FsPaths.writeString(spark,
-            new org.apache.hadoop.fs.Path(tmp, "_GRAFT_COMPLETE"), fp)
-        }
-      }
-      }
+    graft.sources.Artifacts.corpusStore(spark, path, s"$dir/documents.parquet") { tmp =>
+      matrixReportEndToEnd(spark, dir).write.mode("overwrite").parquet(tmp.toString)
     }
     path.toString
   }

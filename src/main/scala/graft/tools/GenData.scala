@@ -347,11 +347,11 @@ object GenData {
       if (args.length > 6) GenOpts(seed, args(3).toDouble, args(4).toDouble,
         args(5).toDouble, args(6).toDouble)
       else GenOpts(seed = seed)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.DeployProfile.localCpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-gendata")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

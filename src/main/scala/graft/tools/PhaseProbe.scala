@@ -19,10 +19,9 @@ object PhaseProbe {
       case Some("ALL") | None => SparkEntry.lanes.sortBy(_.name)
       case Some(s) => SparkEntry.lanesNamed(s.split(',').toSeq)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = DeployProfile.configure(
         SparkSession.builder().appName("graft-phase-probe"),
-        DeployProfile.local(cpus.toInt))
+        DeployProfile.local(DeployProfile.localCpus))
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

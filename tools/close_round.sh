@@ -21,6 +21,12 @@ SF_DIR="${2:-/root/testdata/sf0.01}"
 BENCH_SF="${3:-/root/testdata/sf0.1}"
 WORK="/tmp/close_r${ROUND}"
 mkdir -p "$WORK"
+# per-run JVM scratch: Spark's blockmgr-*/spark-* dirs and every
+# java.io.tmpdir temp dir of Verify and Bench land here, and the EXIT
+# trap removes it however the run ends — a killed JVM leaves nothing
+RUN_TMP="$(mktemp -d "$WORK/jvm_tmp.XXXXXX")"
+trap 'rm -rf "$RUN_TMP"' EXIT
+trap 'exit 1' INT TERM HUP
 
 ADD_OPENS=(
   --add-opens=java.base/java.lang=ALL-UNNAMED
@@ -47,7 +53,8 @@ echo "[close] compiling HEAD"
 sbt -batch compile > "$WORK/compile.log" 2>&1
 
 echo "[close] full Verify at $SF_DIR"
-SPARK_GRAFT_CPUS="$CPUS" java "${ADD_OPENS[@]}" -Xmx"$HEAP" -cp "$CP" \
+SPARK_GRAFT_CPUS="$CPUS" SPARK_LOCAL_DIRS="$RUN_TMP" \
+java "${ADD_OPENS[@]}" -Xmx"$HEAP" -Djava.io.tmpdir="$RUN_TMP" -cp "$CP" \
   graft.Verify "$SF_DIR" "$WORK/verify" > "$WORK/verify.log" 2>&1 || {
     echo "[close] VERIFY FAILED — see $WORK/verify.log"; exit 1; }
 
@@ -60,8 +67,8 @@ python3 tools/check_oracle.py "$SF_DIR" "$WORK/verify" \
 echo "[close] bench protocol: two solo REPEATS=2 passes at $BENCH_SF"
 for PASS in 1 2; do
   SPARK_GRAFT_SF_DIR="$BENCH_SF" SPARK_GRAFT_CPUS="$CPUS" \
-  SPARK_GRAFT_BENCH_REPEATS=2 \
-  java "${ADD_OPENS[@]}" -Xmx"$HEAP" -cp "$CP" graft.Bench \
+  SPARK_GRAFT_BENCH_REPEATS=2 SPARK_LOCAL_DIRS="$RUN_TMP" \
+  java "${ADD_OPENS[@]}" -Xmx"$HEAP" -Djava.io.tmpdir="$RUN_TMP" -cp "$CP" graft.Bench \
     2> "$WORK/bench_pass${PASS}.err" | grep '"metric"' \
     > "$WORK/bench_pass${PASS}.jsonl" || {
       echo "[close] BENCH PASS $PASS FAILED — see $WORK/bench_pass${PASS}.err"
