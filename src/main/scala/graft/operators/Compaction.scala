@@ -3,16 +3,18 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** AUTOMATED compaction policy for the log-structured ANN stores —
-  * the maintenance loop a standing deployment runs so nobody has to
+/** AUTOMATED compaction policy for the two mutable ANN stores — the
+  * IVF dir index (list_id-partitioned parquet + tombstone sidecar) and
+  * the HNSW bucketed serving store (log-structured catalog table). It
+  * is the maintenance loop a standing deployment runs so nobody has to
   * remember to: every ingest-time mutation checks cheap store health
-  * metrics against thresholds and fires the EXISTING partial
-  * compaction when one trips (the LSM/Lucene merge-policy pattern).
-  * The compactions themselves are unchanged and result-preserving, so
-  * every store oracle row reads identically whether maintenance ran
-  * by hand or by policy; only file lifetimes differ — and untouched
-  * partitions stay byte-identical either way
-  * (CompactionPolicySpec re-pins it through the auto face).
+  * metrics against thresholds and fires the EXISTING compaction when
+  * one trips (the LSM/Lucene merge-policy pattern). The compactions
+  * themselves are unchanged and result-preserving, so every store
+  * oracle row reads identically whether maintenance ran by hand or by
+  * policy; only file lifetimes differ — and untouched IVF lists stay
+  * byte-identical either way (CompactionPolicySpec re-pins it through
+  * the auto face).
   *
   * Thresholds are exact RATIONALS compared by integer cross-multiply
   * (`tombstones·tombDen ≥ liveRows·tombNum`, default 1/5, live = total
@@ -22,15 +24,15 @@ import org.apache.spark.sql.functions._
   * are one cheap aggregate over data the mutation just touched.
   *
   * Scale: the policy adds two counts per mutation batch; a fire costs
-  * exactly what the manual compaction costs — the tombstone-bearing
-  * partitions' rewrite, never a full-store pass (except the bucketed
-  * log collapse, which is the log-bounding rewrite by design).
+  * exactly what the manual compaction costs — the IVF index rewrites
+  * only its tombstone-bearing lists; the bucketed store's log collapse
+  * is a full-table rewrite by design.
   */
 object Compaction {
 
-  /** `tombNum/tombDen` — the tombstone fraction that triggers a dir
-    * store compaction; `maxSegments` — the bucketed store's version
-    * count that triggers a log collapse.
+  /** `tombNum/tombDen` — the tombstone fraction that triggers a
+    * compaction on either store; `maxSegments` — the bucketed store's
+    * version count that triggers a log collapse.
     */
   final case class Policy(tombNum: Long = 1L, tombDen: Long = 5L,
                           maxSegments: Long = 8L)
@@ -63,33 +65,6 @@ object Compaction {
       val n = spark.read.parquet(indexDir).count()
       val fire = t * policy.tombDen >= (n - t) * policy.tombNum
       if (fire) Similarity.compactIvfIndex(spark, indexDir)
-      fire
-    }
-  }
-
-  // ── HNSW dir graph store (shard-partitioned parquet + sidecar) ──
-
-  /** Tombstone `ids` then compact if the pending-tombstone fraction
-    * reached the policy threshold. Returns whether compaction fired.
-    */
-  def removeFromGraphStoreAuto(spark: SparkSession, storeDir: String,
-                               ids: DataFrame, shards: Int,
-                               params: Hnsw.Params = Hnsw.Params(),
-                               policy: Policy = Policy()): Boolean = {
-    Hnsw.removeFromGraphStore(spark, storeDir, ids, shards)
-    maybeCompactGraph(spark, storeDir, shards, params, policy)
-  }
-
-  def maybeCompactGraph(spark: SparkSession, storeDir: String, shards: Int,
-                        params: Hnsw.Params = Hnsw.Params(),
-                        policy: Policy = Policy()): Boolean = {
-    val t = Hnsw.graphTombstones(spark, storeDir).count()
-    if (t == 0L) false
-    else {
-      // live denominator, as in [[maybeCompactIvf]]
-      val n = spark.read.parquet(storeDir).count()
-      val fire = t * policy.tombDen >= (n - t) * policy.tombNum
-      if (fire) Hnsw.compactGraphStore(spark, storeDir, shards, params)
       fire
     }
   }

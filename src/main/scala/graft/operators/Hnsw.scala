@@ -441,25 +441,8 @@ object Hnsw {
         g.nbrs(i).toSeq.map(_.toSeq.map(g.ids(_)).sorted), embs(i))
     }
 
-  // ── On-disk graph store (the serving artifact): Node rows
-  // partitioned by shard; built once, grown by micro-batch inserts ──
-
-  /** Build the store from a base vector set (vec_id, embedding). */
-  def buildGraphStore(spark: SparkSession, base: DataFrame, storeDir: String,
-                      shards: Int, params: Params = Params()): Unit = {
-    import spark.implicits._
-    builtShardNodes(spark,
-      base.select(col("vec_id"), col("embedding"))
-        .withColumn("shard", (col("vec_id") % shards).cast("int"))
-        .as[(Long, Seq[Float], Int)], shards, params)
-      .toDF()
-      .write.mode("overwrite").partitionBy("shard").parquet(storeDir)
-  }
-
-  /** Per-shard from-scratch graph construction (vec_id-order inserts) —
-    * shared by the initial build and by compaction, so a compacted
-    * shard is node-for-node the graph a fresh build on the remainder
-    * would produce.
+  /** Per-shard from-scratch graph construction (vec_id-order inserts)
+    * for [[buildBucketedStore]].
     */
   private def builtShardNodes(spark: SparkSession,
                               rows: org.apache.spark.sql.Dataset[(Long, Seq[Float], Int)],
@@ -478,148 +461,6 @@ object Hnsw {
             emitNodes(shard, g, sorted.map(_._2).toIndexedSeq)
         }
       }
-  }
-
-  /** Insert a vector batch into the store — HNSW's native ingest at
-    * rest: the batch is narrowed to NEVER-SEEN vec_ids (anti-join
-    * against the store, so a replayed micro-batch performs ZERO writes
-    * — the idempotence that turns at-least-once replay into
-    * exactly-once store content), only the shards the remaining rows
-    * land in are loaded, each shard's graph is reconstructed, the new
-    * rows inserted in vec_id order, and ONLY those shard directories
-    * rewritten (dynamic partition overwrite; untouched shards keep
-    * their files byte-identical — pinned in StreamingHnswSpec).
-    *
-    * Scale: per-batch cost = Σ touched-shard sizes + batch insert work
-    * (efC·log n distance evaluations per row) — independent of corpus
-    * size, the standard sharded-ANN ingest bound.
-    */
-  def insertIntoGraphStore(spark: SparkSession, storeDir: String,
-                           batch: DataFrame, shards: Int,
-                           params: Params = Params()): Unit = {
-    import spark.implicits._
-    val store = spark.read.parquet(storeDir)
-    val fresh = batch.select(col("vec_id"), col("embedding"))
-      .join(store.select(col("vec_id")), Seq("vec_id"), "left_anti")
-      .withColumn("shard", (col("vec_id") % shards).cast("int"))
-      .as[(Long, Seq[Float], Int)]
-    val touched = fresh.select(col("shard")).distinct()
-      .collect().map(_.getInt(0)) // ≤ shards — bounded planning metadata
-    if (touched.isEmpty) return
-    val existing = store
-      .filter(col("shard").isin(touched.map(Integer.valueOf): _*))
-      .select(col("shard"), col("vec_id"), col("level"), col("nbrs"), col("embedding"))
-      .as[Node]
-    val rebuilt = existing.groupByKey(_.shard)
-      .cogroup(fresh.groupByKey(_._3)) { (shard, nodesIt, batchIt) =>
-        val nodes = nodesIt.toArray
-        val adds = batchIt.toArray.sortBy(_._1)
-        val g = reconstruct(nodes, params)
-        adds.foreach { case (id, v, _) => g.insert(id, normalize(v)) }
-        val embs = nodes.sortBy(_.vec_id).map(_.embedding) ++ adds.map(_._2)
-        emitNodes(shard, g, embs.toIndexedSeq)
-      }
-    rebuilt.toDF()
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("shard").parquet(storeDir)
-  }
-
-  /** Exact top-k probe of the store (same contract as the gate lane).
-    * Tombstoned vec_ids are filtered from the CANDIDATES — dead nodes
-    * keep routing (graph connectivity is untouched until compaction,
-    * the Lucene deleted-doc / Faiss remove_ids-deferred discipline)
-    * but can never surface as results.
-    */
-  def probeGraphStore(spark: SparkSession, storeDir: String, dir: String,
-                      k: Int = 5, queryStride: Int = 50,
-                      params: Params = Params()): DataFrame = {
-    val store = spark.read.parquet(storeDir)
-      .select(col("shard"), col("vec_id"), col("level"), col("nbrs"), col("embedding"))
-    val raw = searchGraph(spark, store, Tables.embeddings(spark, dir),
-      queryStride, params)
-    // a tombstone-free store (the compacted steady state) keeps its
-    // probe plan join-free
-    val cand =
-      if (!graft.sources.FsPaths.exists(spark,
-          new org.apache.hadoop.fs.Path(tombstoneDir(storeDir)))) raw
-      else raw.join(graphTombstones(spark, storeDir).select(col("vec_id")),
-        Seq("vec_id"), "left_anti")
-    rerank(spark, dir, cand, k, queryStride)
-  }
-
-  // ── Tombstoned DELETE (the Faiss remove_ids / Lucene delete-doc
-  // analog): removal appends (vec_id, shard) tombstone rows to a
-  // sidecar directory — O(batch), no store file touched; probes
-  // anti-join the (small, between-compactions) tombstone set out of
-  // their candidates; compaction rebuilds ONLY tombstone-bearing
-  // shards from their live rows and clears the sidecar. ──
-
-  private def tombstoneDir(storeDir: String): String =
-    storeDir.stripSuffix("/") + "_tombstones"
-
-  /** The store's pending tombstones — empty frame when none recorded. */
-  private[operators] def graphTombstones(spark: SparkSession,
-                                         storeDir: String): DataFrame = {
-    val d = tombstoneDir(storeDir)
-    if (graft.sources.FsPaths.exists(spark, new org.apache.hadoop.fs.Path(d)))
-      spark.read.parquet(d).select(col("vec_id"), col("shard"))
-    else {
-      import spark.implicits._
-      spark.emptyDataset[(Long, Int)].toDF("vec_id", "shard")
-    }
-  }
-
-  /** Delete a batch of vec_ids from the store: tombstone rows only —
-    * the shard comes from the same modulo rule every ingest uses, so
-    * compaction knows exactly which shards bear deletes without a
-    * store read. Deleting an absent id is a harmless no-op tombstone.
-    */
-  def removeFromGraphStore(spark: SparkSession, storeDir: String,
-                           ids: DataFrame, shards: Int): Unit =
-    ids.select(col("vec_id").cast("long"))
-      .withColumn("shard", (col("vec_id") % shards).cast("int"))
-      .write.mode("append").parquet(tombstoneDir(storeDir))
-
-  /** Fold pending tombstones into the store: ONLY the shards bearing
-    * tombstones are rebuilt — from scratch on their live rows, in
-    * vec_id insert order ([[builtShardNodes]], the initial build's
-    * construction), so a compacted shard is node-for-node what a fresh
-    * build on the remainder produces. Untouched shards keep their
-    * files byte-identical (dynamic partition overwrite; pinned in
-    * HnswDeleteSpec). A shard whose rows all died is dropped
-    * explicitly (dynamic overwrite writes nothing for it — the
-    * [[graft.sources.CdcMerge]] emptied-partition discipline).
-    */
-  def compactGraphStore(spark: SparkSession, storeDir: String, shards: Int,
-                        params: Params = Params()): Unit = {
-    import spark.implicits._
-    val dead = graphTombstones(spark, storeDir)
-    val touched = dead.select(col("shard")).distinct()
-      .collect().map(_.getInt(0)) // ≤ shards — bounded planning metadata
-    if (touched.nonEmpty) {
-      val live = spark.read.parquet(storeDir)
-        .filter(col("shard").isin(touched.map(Integer.valueOf): _*))
-        .join(dead.select(col("vec_id")), Seq("vec_id"), "left_anti")
-        .select(col("vec_id"), col("embedding"), col("shard"))
-        .as[(Long, Seq[Float], Int)]
-      val rebuilt = builtShardNodes(spark, live, shards, params)
-        .toDF()
-        // materialize before the overwrite starts deleting the very
-        // directories this plan reads
-        .localCheckpoint(true)
-      rebuilt.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("shard").parquet(storeDir)
-      val survived = rebuilt.select(col("shard")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      touched.filterNot(survived).foreach { s =>
-        graft.sources.FsPaths.deleteRecursively(spark,
-          new org.apache.hadoop.fs.Path(storeDir, s"shard=$s"))
-      }
-    }
-    graft.sources.FsPaths.deleteRecursively(spark,
-      new org.apache.hadoop.fs.Path(tombstoneDir(storeDir)))
   }
 
   // ── Bucketed graph store (the repeat-batch SERVING layout):
@@ -709,10 +550,9 @@ object Hnsw {
     * of the mark (re-marking a dead id changes nothing a probe can
     * see). Probes drop dead nodes at reconstruction ([[latestNodes]]);
     * [[compactBucketedStore]] physically removes both the history and
-    * the tombstone, after which the id is re-insertable — the dir
-    * store's post-compaction semantics. Until then a re-insert of a
-    * marked id is a no-op (the anti-join sees the tombstone row), the
-    * same visibility rule as the dir store between delete and compact.
+    * the tombstone, after which the id is re-insertable. Until then a
+    * re-insert of a marked id is a no-op (the anti-join sees the
+    * tombstone row). Pinned in AnnDeleteSpec and CompactionPolicySpec.
     */
   def removeFromBucketedStore(spark: SparkSession, table: String,
                               ids: DataFrame): Unit = {
@@ -805,10 +645,10 @@ object Hnsw {
     name
   }
 
-  /** Insert a vector batch into the BUCKETED serving store — the
-    * catalog-table counterpart of [[insertIntoGraphStore]], under the
-    * constraint that a bucketed table supports only APPEND maintenance
-    * (no per-partition overwrite): the store is log-structured. The
+  /** Insert a vector batch into the BUCKETED serving store — HNSW's
+    * native ingest at rest, under the constraint that a bucketed table
+    * supports only APPEND maintenance (no per-partition overwrite): the
+    * store is log-structured. The
     * batch narrows to never-seen vec_ids (replay ⇒ zero writes), the
     * touched shards' latest graphs are reconstructed and the rows
     * inserted, and the append ships ONLY the new nodes plus the
@@ -865,8 +705,8 @@ object Hnsw {
   }
 
   /** Build a bucketed serving store from an arbitrary base vector set —
-    * [[buildGraphStore]]'s counterpart on the catalog layout, and the
-    * seam the streaming ingest twin grows from.
+    * the seam the streaming ingest sink
+    * ([[graft.streaming.StreamingHnsw.bucketedInsertSink]]) grows from.
     */
   def buildBucketedStore(spark: SparkSession, base: DataFrame, table: String,
                          shards: Int, params: Params = Params()): Unit = {
@@ -907,9 +747,9 @@ object Hnsw {
     val latest = spark.table(table)
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-      // tombstones compact AWAY (the id becomes re-insertable — the
-      // dir store's post-compaction semantics); their dangling edge
-      // refs stay harmless, reconstruct skips unknown neighbors
+      // tombstones compact AWAY (the id becomes re-insertable); their
+      // dangling edge refs stay harmless, reconstruct skips unknown
+      // neighbors
       .filter(col("level") >= 0)
       // a collapsed log is ONE segment: reset every surviving row to
       // version 0 so the segment count (distinct ver — the automated

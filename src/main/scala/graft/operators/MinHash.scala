@@ -65,19 +65,22 @@ object MinHash {
     shingleArray(docs).select(col("doc_id"),
       graft.functions.functions.minhash_sig(col("shingles"), NumHashes).as("sig"))
 
-  /** doc_id, band_id, band_key — one row per band; band_key = md5 of the
-    * band's concatenated signature rows.
+  /** The band-key formula: an array of one (band_id, band_key) struct
+    * per band of `sig`, band_key = md5 of the band's `|`-joined
+    * signature rows. Every banding path (batch [[bands]] and the
+    * streaming near-dup and incremental probes) explodes this one column.
     */
-  def bands(sigs: DataFrame, rows: Int = BandRows): DataFrame = {
-    val nBands = NumHashes / rows
-    val bandRows = (0 until nBands).map { b =>
+  def bandStructs(sig: Column, rows: Int = BandRows): Column =
+    array((0 until NumHashes / rows).map { b =>
       struct(lit(b).as("band_id"),
         md5(concat_ws("|",
-          (0 until rows).map(r => col("sig")(b * rows + r)): _*)).as("band_key"))
-    }
-    sigs.select(col("doc_id"), explode(array(bandRows: _*)).as("bk"))
+          (0 until rows).map(r => sig(b * rows + r)): _*)).as("band_key"))
+    }: _*)
+
+  /** doc_id, band_id, band_key — one row per band ([[bandStructs]]). */
+  def bands(sigs: DataFrame, rows: Int = BandRows): DataFrame =
+    sigs.select(col("doc_id"), explode(bandStructs(col("sig"), rows)).as("bk"))
       .select(col("doc_id"), col("bk.band_id").as("band_id"), col("bk.band_key").as("band_key"))
-  }
 
   /** LSH OPERATING-CURVE SWEEP — the S-curve tuning artifact every
     * near-dup deployment produces before fixing (r, b): with r rows per

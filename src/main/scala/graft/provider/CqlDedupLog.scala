@@ -44,7 +44,8 @@ import java.util.concurrent.ConcurrentHashMap
   *    pinned by the file log and the contract suite — PRESERVES the
   *    original attempt's expiry, so the binding first reads the row's
   *    remaining ttl (`SELECT ttl(state) ...`, one point read) and
-  *    re-binds that.
+  *    re-binds that; when the point read finds no row (the attempt
+  *    already expired) it writes nothing.
   *  - `read` (reference select :181-192): `SELECT time_uuid,
   *    record_uuid, state FROM ks.t WHERE key=:key` at EACH_QUORUM.
   *    Expired rows never come back (server-side TTL), so the trait's
@@ -122,14 +123,16 @@ class CqlDedupLog(session: CqlSessionLike, profileName: String = CqlDedupLog.Def
                            timeMicros: Long, uuid: String, state: Short): Unit = {
     val timeUuid = TimeUuid.fromMicros(timeMicros, uuid)
     val pk = Map[String, Any]("key" -> key, "time_uuid" -> timeUuid, "record_uuid" -> uuid)
-    // preserve the original expiry (contract): remaining server ttl, or
-    // 0 (immortal) when the row had none / already vanished
-    val remaining = session.execute(ttlStmt(ks, t), pk).rows.headOption
-      .flatMap(r => Option(r("ttl_remaining"))).map(_.asInstanceOf[Int]).getOrElse(0)
-    val applied = session.execute(upsertStmt(ks, t),
-      pk + ("state" -> state) + ("ttl" -> remaining))
-    if (!applied.wasApplied)
-      throw new IllegalStateException(s"update of $key to '$state' wasn't applied")
+    // preserve the original expiry (contract): the remaining server ttl,
+    // or 0 (immortal) when the row has none. A row that already expired
+    // is not written at all — binding TTL 0 would resurrect it forever
+    session.execute(ttlStmt(ks, t), pk).rows.headOption.foreach { r =>
+      val remaining = Option(r("ttl_remaining")).map(_.asInstanceOf[Int]).getOrElse(0)
+      val applied = session.execute(upsertStmt(ks, t),
+        pk + ("state" -> state) + ("ttl" -> remaining))
+      if (!applied.wasApplied)
+        throw new IllegalStateException(s"update of $key to '$state' wasn't applied")
+    }
   }
 
   override def read(ks: String, t: String, key: String, nowMicros: Long): Seq[AttemptRecord] =

@@ -4,44 +4,29 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Hnsw
 
-/** Streaming ingest into the on-disk sharded HNSW graph store — the
+/** Streaming ingest into the bucketed HNSW serving store — the
   * graph-index member of the exactly-once ingest family
   * ([[StreamingIvf]] for inverted lists, [[StreamingIncremental]] for
   * shingle buckets): vector micro-batches are INSERTED into their
-  * shard graphs via `foreachBatch`, only touched shard directories are
-  * rewritten, and a replayed micro-batch performs zero writes (the
-  * insert narrows to never-seen vec_ids first), so store CONTENT is
-  * exactly-once under at-least-once replay without a batch-id layout.
+  * shard graphs via `foreachBatch` as log-structured appends, and a
+  * replayed micro-batch performs zero writes (the insert narrows to
+  * never-seen vec_ids first), so store CONTENT is exactly-once under
+  * at-least-once replay without a batch-id layout.
   *
-  * Parity (StreamingHnswSpec): after the stream drains, the store is
-  * node-row-identical to the same [[Hnsw.insertIntoGraphStore]] calls
-  * made synchronously in batch (micro-batch boundaries are the ONLY
-  * thing streaming adds, and each insert is a deterministic function
-  * of store content + batch), and probing it surfaces the exact
-  * brute-force top-k — ingest must not cost recall, the same contract
-  * the grown-graph lane gates.
+  * Parity (StreamingBucketedHnswSpec, StreamingHnswSq8Spec): after the
+  * stream drains, the store holds the same rows as the same
+  * [[Hnsw.insertIntoBucketedStore]] (or [[Hnsw.insertIntoSq8Store]])
+  * calls made synchronously in batch
+  * (micro-batch boundaries are the ONLY thing streaming adds, and each
+  * insert is a deterministic function of store content + batch), and
+  * probing it surfaces the exact brute-force top-k — ingest must not
+  * cost recall, the same contract the grown-graph lane gates.
   *
-  * Why `foreachBatch`: the store layout (one dir per shard, loaded
-  * whole per insert) and the anti-join narrowing are batch constructs;
-  * a streaming file sink cannot express read-modify-rewrite of a graph.
+  * Why `foreachBatch`: the per-shard graph reconstruction and the
+  * anti-join narrowing are batch constructs; a streaming file sink
+  * cannot express read-modify-append of a graph.
   */
 object StreamingHnsw {
-
-  /** Start the insert sink: each micro-batch of `vectors`
-    * (`vec_id bigint, embedding array<float>`) lands in its shard
-    * graphs under `storeDir` (built beforehand via
-    * [[Hnsw.buildGraphStore]]).
-    */
-  def insertSink(spark: SparkSession, storeDir: String, vectors: DataFrame,
-                 shards: Int, params: Hnsw.Params = Hnsw.Params(),
-                 checkpoint: Option[String] = None): StreamingQuery = {
-    val writer = vectors.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        Hnsw.insertIntoGraphStore(spark, storeDir, batch.toDF(), shards, params)
-      }
-    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
-  }
 
   /** Streaming ingest into the BUCKETED serving store (the
     * `ann_hnsw_served` catalog table) — the streaming face the r12
@@ -50,9 +35,9 @@ object StreamingHnsw {
     * rewired node rows under the next version, pre-existing bucket
     * files untouched), and the same anti-join narrowing makes a
     * replayed batch write NOTHING — store content is exactly-once
-    * under at-least-once delivery, the [[insertSink]] contract on the
-    * serving layout. Each insert also re-touches the store marker, so
-    * standing probes' executor graph caches roll forward per batch.
+    * under at-least-once delivery. Each insert also re-touches the
+    * store marker, so standing probes' executor graph caches roll
+    * forward per batch.
     */
   def bucketedInsertSink(spark: SparkSession, table: String,
                          vectors: DataFrame,

@@ -48,18 +48,12 @@ object StreamingIncremental {
   def matches(incoming: DataFrame, corpusBands: DataFrame,
               corpusShingles: DataFrame, threshold: Double = 0.5): DataFrame = {
     import graft.functions.functions._
-    import MinHash.{BandRows, NumHashes, ShingleSize}
-    val nBands = NumHashes / BandRows
-    val bandStructs = (0 until nBands).map { b =>
-      struct(lit(b).as("band_id"),
-        md5(concat_ws("|",
-          (0 until BandRows).map(r => col("sig")(b * BandRows + r)): _*)).as("band_key"))
-    }
+    import MinHash.{NumHashes, ShingleSize, bandStructs}
     val banded = incoming
       .withColumn("sh_a", word_shingles(col("text"), ShingleSize))
       .withColumn("sig", minhash_sig(col("sh_a"), NumHashes))
       .select(col("doc_id").as("doc_a"), col("sh_a"),
-        explode(array(bandStructs: _*)).as("bk"))
+        explode(bandStructs(col("sig"))).as("bk"))
       .select(col("doc_a"), col("sh_a"),
         col("bk.band_id").as("band_id"), col("bk.band_key").as("band_key"))
     banded.join(corpusBands, Seq("band_id", "band_key"))

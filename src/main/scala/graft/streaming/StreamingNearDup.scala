@@ -69,21 +69,15 @@ object StreamingNearDup {
       (implicit spark: SparkSession): Dataset[T] = {
     import spark.implicits._
     import graft.functions.functions._
-    import graft.operators.MinHash.{BandRows, NumHashes, ShingleSize}
-    val nBands = NumHashes / BandRows
+    import graft.operators.MinHash.{NumHashes, ShingleSize, bandStructs}
     val src =
       if (ttlMillis > 0) docs.toDF().withWatermark("event_time", watermarkDelay)
       else docs.toDF()
     // banding inline (not MinHash.bands) so event_time rides along for
     // the TTL clock
-    val bandStructs = (0 until nBands).map { b =>
-      struct(lit(b).as("band_id"),
-        md5(concat_ws("|",
-          (0 until BandRows).map(r => col("sig")(b * BandRows + r)): _*)).as("band_key"))
-    }
     val banded = src
       .withColumn("sig", minhash_sig(word_shingles(col("text"), ShingleSize), NumHashes))
-      .select(col("doc_id"), col("event_time"), explode(array(bandStructs: _*)).as("bk"))
+      .select(col("doc_id"), col("event_time"), explode(bandStructs(col("sig"))).as("bk"))
       .select(col("doc_id"), col("event_time"),
         col("bk.band_id").as("band_id"), col("bk.band_key").as("band_key"))
       .as[(Long, Timestamp, Int, String)]

@@ -9,7 +9,8 @@ import graft.{DeployProfile, Lane, SparkEntry}
   * or execution-bound before any optimization is attempted. Not part of
   * the bench contract; numbers land in OPTIMIZATION_r15.md.
   *
-  * Usage: PhaseProbe <sfDir> <repeats> <lane>[,lane...]
+  * Usage: PhaseProbe <sfDir> <repeats> <lane>[,lane...] — exits 1 when
+  * any lane failed.
   */
 object PhaseProbe {
   def main(args: Array[String]): Unit = {
@@ -28,6 +29,17 @@ object PhaseProbe {
     // same warmup as Bench
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
+    val failed = try run(spark, dir, lanes, repeats) finally spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** Probes `lanes` in order and prints each lane's phase and stage
+    * lines. A lane whose builder or any repeat throws prints one
+    * `[phase] <lane> FAILED: …` line and no timing, and the sweep goes
+    * on (Bench's contract). Returns the failed lane names.
+    */
+  def run(spark: SparkSession, dir: String, lanes: Seq[Lane],
+          repeats: Int): Seq[String] = {
     // stage-level accounting: submitted→completed wall span and summed
     // task time per stage, so scheduling gaps (wall ≫ task work) are
     // visible separately from compute
@@ -43,34 +55,39 @@ object PhaseProbe {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    lanes.foreach { case Lane(lane, fn, _, build) =>
-      // stage builders run first, untimed — same contract as Bench
-      build.foreach { b =>
-        try b(spark, dir)
-        catch { case e: Throwable =>
-          System.err.println(s"[phase] $lane builder failed: ${e.getMessage}") }
+    try lanes.flatMap { case Lane(lane, fn, _, build) =>
+      // a lane's lines are held back until every repeat has run, so a
+      // failing lane shows no timing at all
+      val lines = Seq.newBuilder[String]
+      try {
+        // stage builders run first, untimed — same contract as Bench
+        build.foreach(_(spark, dir))
+        (1 to repeats).foreach { i =>
+          stages.clear()
+          val t0 = System.nanoTime()
+          val df = fn(spark, dir)
+          val t1 = System.nanoTime()
+          df.queryExecution.executedPlan // force analysis/opt/planning
+          val t2 = System.nanoTime()
+          df.write.format("noop").mode("overwrite").save()
+          val t3 = System.nanoTime()
+          Thread.sleep(100) // let listener drain
+          val st = stages.toArray(Array.empty[(Int, Long, Long, Int)]).sortBy(_._1)
+          val stageWall = st.map(_._2).sum
+          val taskMs = st.map(_._3).sum
+          val nTasks = st.map(_._4).sum
+          lines += f"[phase] $lane%-26s run$i build=${(t1 - t0) / 1e6}%6.1f plan=${(t2 - t1) / 1e6}%6.1f exec=${(t3 - t2) / 1e6}%7.1f ms | stages=${st.length}%2d stageWall=$stageWall%5d taskSum=$taskMs%5d tasks=$nTasks%4d"
+          if (i == repeats)
+            st.foreach { case (id, w, tm, n) =>
+              lines += f"[stage]   $lane%-24s stage=$id%4d wall=$w%5d ms taskSum=$tm%5d ms tasks=$n%3d"
+            }
+        }
+        lines.result().foreach(println)
+        None
+      } catch { case e: Throwable =>
+        println(s"[phase] $lane FAILED: ${e.getMessage}")
+        Some(lane)
       }
-      (1 to repeats).foreach { i =>
-        stages.clear()
-        val t0 = System.nanoTime()
-        val df = fn(spark, dir)
-        val t1 = System.nanoTime()
-        df.queryExecution.executedPlan // force analysis/opt/planning
-        val t2 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        val t3 = System.nanoTime()
-        Thread.sleep(100) // let listener drain
-        val st = stages.toArray(Array.empty[(Int, Long, Long, Int)]).sortBy(_._1)
-        val stageWall = st.map(_._2).sum
-        val taskMs = st.map(_._3).sum
-        val nTasks = st.map(_._4).sum
-        println(f"[phase] $lane%-26s run$i build=${(t1 - t0) / 1e6}%6.1f plan=${(t2 - t1) / 1e6}%6.1f exec=${(t3 - t2) / 1e6}%7.1f ms | stages=${st.length}%2d stageWall=$stageWall%5d taskSum=$taskMs%5d tasks=$nTasks%4d")
-        if (i == repeats)
-          st.foreach { case (id, w, tm, n) =>
-            println(f"[stage]   $lane%-24s stage=$id%4d wall=$w%5d ms taskSum=$tm%5d ms tasks=$n%3d")
-          }
-      }
-    }
-    spark.stop()
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

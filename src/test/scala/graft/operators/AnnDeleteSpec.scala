@@ -7,10 +7,11 @@ import graft.SparkSpec
 
 /** Tombstoned DELETE in the ANN stores (the Faiss remove_ids / Lucene
   * delete-doc analog): a deleted vector must never surface from a
-  * probe; compaction must rebuild ONLY tombstone-bearing
-  * shards/lists — producing exactly the store a fresh build on the
-  * remainder produces — while untouched partitions keep their files
-  * byte-identical.
+  * probe. On the HNSW bucketed store deletion is a pure append and
+  * compaction drops the tombstone, making the id re-insertable; on the
+  * IVF index compaction rebuilds ONLY tombstone-bearing lists —
+  * producing exactly the rows of the remainder — while untouched lists
+  * keep their files byte-identical.
   */
 class AnnDeleteSpec extends SparkSpec {
 
@@ -23,76 +24,6 @@ class AnnDeleteSpec extends SparkSpec {
       .map(p => (Paths.get(root).relativize(p).toString,
         (Files.getLastModifiedTime(p).toMillis, Files.size(p))))
       .toMap
-
-  private def nodeRows(dir: String) =
-    spark.read.parquet(dir)
-      .select("shard", "vec_id", "level", "nbrs")
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getInt(2),
-        r.getSeq[scala.collection.Seq[Long]](3).map(_.toList).toList))
-      .sortBy(t => (t._1, t._2)).toSeq
-
-  test("graph store: deleted vec never surfaces; compaction ≡ rebuild on remainder; untouched shards byte-identical") {
-    import spark.implicits._
-    val emb = graft.Tables.embeddings(spark, sfDir)
-    val store = graft.sources.Scratch.tempDir("hnsw-del")
-    Hnsw.buildGraphStore(spark, emb, store, shards, params)
-
-    // victims: every result vec of query 0's baseline top-k lands in
-    // shard (vec % 3) — delete the baseline winners so the test can't
-    // pass vacuously
-    val baseline = Hnsw.probeGraphStore(spark, store, sfDir)
-    val victims = baseline.filter(col("q_id") === 0L)
-      .select(col("vec_id")).limit(2).as[Long].collect().toSeq
-    assert(victims.size === 2, "baseline probe had no rows for q 0")
-
-    Hnsw.removeFromGraphStore(spark, store, victims.toDF("vec_id"), shards)
-
-    // marked (pre-compaction) probe: victims gone everywhere
-    val marked = Hnsw.probeGraphStore(spark, store, sfDir)
-    assert(marked.filter(col("vec_id").isin(victims.map(Long.box): _*)).count() === 0,
-      "tombstoned vec surfaced from a probe")
-
-    val victimShards = victims.map(v => (v % shards).toInt).toSet
-    val untouchedBefore = parquetFiles(store)
-      .filter { case (p, _) => !victimShards.exists(s => p.startsWith(s"shard=$s")) }
-
-    Hnsw.compactGraphStore(spark, store, shards, params)
-
-    // untouched shards: byte-identical files
-    val untouchedAfter = parquetFiles(store)
-      .filter { case (p, _) => !victimShards.exists(s => p.startsWith(s"shard=$s")) }
-    assert(untouchedAfter === untouchedBefore, "compaction touched a clean shard")
-
-    // compacted store ≡ fresh build on the remainder, node for node
-    val rebuilt = graft.sources.Scratch.tempDir("hnsw-rebuild")
-    Hnsw.buildGraphStore(spark,
-      emb.filter(!col("vec_id").isin(victims.map(Long.box): _*)),
-      rebuilt, shards, params)
-    assert(nodeRows(store) === nodeRows(rebuilt),
-      "compacted shard diverges from a fresh build on the remainder")
-
-    // post-compaction probe: join-free plan, victims still gone,
-    // results equal the remainder-built store's
-    val compacted = Hnsw.probeGraphStore(spark, store, sfDir).collect().toSet
-    val fresh = Hnsw.probeGraphStore(spark, rebuilt, sfDir).collect().toSet
-    assert(compacted === fresh)
-    assert(!compacted.exists(r => victims.contains(r.getLong(1))))
-  }
-
-  test("graph store: a fully-died shard's directory is dropped") {
-    import spark.implicits._
-    val emb = graft.Tables.embeddings(spark, sfDir).limit(40).localCheckpoint(true)
-    val store = graft.sources.Scratch.tempDir("hnsw-dropshard")
-    Hnsw.buildGraphStore(spark, emb, store, shards, params)
-    val shard0 = emb.filter(col("vec_id") % shards === 0).select("vec_id")
-    Hnsw.removeFromGraphStore(spark, store, shard0, shards)
-    Hnsw.compactGraphStore(spark, store, shards, params)
-    assert(!Files.exists(Paths.get(store, "shard=0")),
-      "emptied shard directory survived compaction")
-    assert(spark.read.parquet(store)
-      .filter(col("shard") === 0).count() === 0)
-  }
 
   test("bucketed store: tombstone row hides the vec; compaction drops it and re-insert revives it") {
     import spark.implicits._

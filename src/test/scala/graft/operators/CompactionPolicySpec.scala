@@ -5,12 +5,12 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** Pins the AUTOMATED compaction policy (Compaction.Policy) on all
-  * three store layouts: thresholds fire the existing partial
-  * compaction exactly when the rational bound trips (never before),
-  * untouched partitions keep their files byte-identical through an
-  * auto-fired compaction, probe results are unchanged by maintenance,
-  * and the streaming ingest face keeps its own log bounded.
+/** Pins the AUTOMATED compaction policy (Compaction.Policy) on both
+  * mutable store layouts: thresholds fire the existing compaction
+  * exactly when the rational bound trips (never before), untouched IVF
+  * lists keep their files byte-identical through an auto-fired
+  * compaction, probe results are unchanged by maintenance, and the
+  * streaming ingest face keeps its own log bounded.
   */
 class CompactionPolicySpec extends SparkSpec {
   import spark.implicits._
@@ -63,37 +63,42 @@ class CompactionPolicySpec extends SparkSpec {
       .filter(col("vec_id").isin(dead.toSeq.map(Long.box): _*)).count() === 0)
   }
 
-  test("graph dir store: auto face defers below threshold, fires above; probe identical to manual maintenance") {
+  test("bucketed store: tombstone fraction defers below 1/5, fires above; probe equals brute force on the remainder") {
     val emb = graft.Tables.embeddings(spark, sfDir)
-    val store = graft.sources.Scratch.tempDir("hnsw-auto")
-    val shards = 3
-    Hnsw.buildGraphStore(spark, emb, store, shards)
+    val table = "graft_test_compact_tombs"
+    Hnsw.buildBucketedStore(spark, emb, table, 3)
     val ids = emb.select(col("vec_id")).as[Long].collect().sorted
     val n = ids.length.toLong
+    // collected eagerly: a compaction rewrite replaces the files a lazy
+    // plan would list
+    def probe() = Hnsw.servedTopKOf(spark, table, sfDir)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-    val fired1 = Compaction.removeFromGraphStoreAuto(spark, store,
-      Seq(ids.head).toDF("vec_id"), shards)
-    assert(!fired1)
-    // pending tombstone still masks the victim at probe time
-    assert(Hnsw.probeGraphStore(spark, store, sfDir)
-      .filter(col("vec_id") === ids.head).count() === 0)
+    // one tombstone over n rows: 1·5 ≥ n·1 is false for n > 5 — the
+    // mark stays pending, yet the probe already hides the victim
+    Hnsw.removeFromBucketedStore(spark, table, Seq(ids.head).toDF("vec_id"))
+    assert(!Compaction.maybeCompactBucketed(spark, table),
+      "a single tombstone must not trip a 20% threshold")
+    assert(!probe().exists(_._2 == ids.head), "pending tombstone surfaced")
 
     val more = ids.drop(1).take((n / 5).toInt + 1).toSeq
-    val fired2 = Compaction.removeFromGraphStoreAuto(spark, store,
-      more.toDF("vec_id"), shards)
-    assert(fired2, "crossing the fraction must fire graph compaction")
-    // compacted store ≡ fresh build on the remainder (the manual
-    // contract, now reached through the policy face)
-    val rebuilt = graft.sources.Scratch.tempDir("hnsw-auto-ref")
-    val dead = (Seq(ids.head) ++ more).toSet
-    Hnsw.buildGraphStore(spark,
-      emb.filter(!col("vec_id").isin(dead.toSeq.map(Long.box): _*)),
-      rebuilt, shards)
-    val got = Hnsw.probeGraphStore(spark, store, sfDir)
+    Hnsw.removeFromBucketedStore(spark, table, more.toDF("vec_id"))
+    assert(Compaction.maybeCompactBucketed(spark, table),
+      "crossing the tombstone fraction must collapse the log")
+    assert(spark.table(table).filter(col("level") < 0).count() === 0L)
+
+    // brute force over the remainder, scored and ranked like the probe
+    val dead = (ids.head +: more).map(Long.box)
+    val q = emb.filter(col("vec_id") % 50 === 0)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    val expect = Similarity.topKBySim(
+      emb.filter(!col("vec_id").isin(dead: _*)).crossJoin(q)
+        .filter(col("vec_id") =!= col("q_id"))
+        .select(col("q_id"), col("vec_id"),
+          round(Similarity.cosine(col("q_emb"), col("embedding")), 6).as("sim")), 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ref = Hnsw.probeGraphStore(spark, rebuilt, sfDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got === ref)
+    assert(expect.nonEmpty)
+    assert(probe() === expect)
   }
 
   test("bucketed store: segment-count bound collapses the log (batch + streaming faces); probes unmoved") {

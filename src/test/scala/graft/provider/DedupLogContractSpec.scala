@@ -13,8 +13,9 @@ import graft.operators.RecordState
   *
   *  1. append → read round-trip in (time, recordUuid) order,
   *  2. TTL expiry (expired attempts vanish; no expiry = immortal),
-  *  3. updateState upserts exactly the addressed primary key and
-  *     PRESERVES the original attempt's expiry,
+  *  3. updateState upserts exactly the addressed primary key,
+  *     PRESERVES the original attempt's expiry and never revives an
+  *     expired one,
   *  4. (keyspace, table) namespaces are isolated,
   *  5. concurrent appends lose nothing,
   *  6. the full provider protocol (success / duplicate / failure audit)
@@ -89,6 +90,19 @@ abstract class DedupLogContractSpec extends AnyFunSuite {
     h.advance(4000000L) // now t0+6s: past the ORIGINAL 5s expiry
     assert(h.log.read(ks, tbl, "k", h.now()) === Seq.empty,
       "the state transition must not extend the attempt's life")
+  }
+
+  test("updateState on an expired attempt does not bring it back") {
+    val h = harness()
+    val t0 = h.now()
+    h.log.append(ks, tbl, AttemptRecord("k", t0, "u1", RecordState.Success,
+      Some(t0 + 2000000L)))
+    h.advance(3000000L) // past the 2s TTL: the block outlived its call
+    h.log.updateState(ks, tbl, "k", t0, "u1", RecordState.Failed)
+    assert(h.log.read(ks, tbl, "k", h.now()) === Seq.empty)
+    h.advance(365L * 86400 * 1000000L)
+    assert(h.log.read(ks, tbl, "k", h.now()) === Seq.empty,
+      "the transition made the expired attempt immortal")
   }
 
   test("(keyspace, table) namespaces are isolated") {
